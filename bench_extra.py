@@ -17,22 +17,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import BENCH_QUERIES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-BENCH_QUERIES = [
-    "pricing_summary", "region_revenue", "latest_order_per_customer",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash_pairs", "dedup_clusters", "ann_topk_cosine",
-    "ann_topk_ivf", "ann_topk_ivf_mp", "ann_topk_ivf_kmeans",
-    "orders_rollup", "token_counts", "lang_heuristic",
-    "render_conversations", "stratified_sample", "tfidf_top_terms",
-    "benchmark_contamination", "dedup_keep_canonical",
-    "dedup_minhash_estimate",
-    "events_asof_join", "events_sessionize", "docs_repetition_ratio",
-    "dedup_hot_shingle_audit", "dedup_prefix_filter",
-    "quality_classifier",
-]
 
 
 def main() -> None:

@@ -1,6 +1,4 @@
-"""Known-answer + cross-engine tests for the round-7 analytics op
-batch (parked for the r8 record window): CUSUM changepoint, RFM
-segmentation, and market-basket co-occurrence.
+"""Known-answer + cross-engine tests for the CUSUM changepoint op.
 """
 
 import datetime as dt
@@ -74,66 +72,3 @@ def test_cusum_constant_stream_is_flat(spark, tmp_path):
                        ["events"])
     r = out.iloc[0]
     assert (r["change_pos"], r["cusum_stat"]) == ("1", "0")
-
-
-# ----------------------------------------------------- customer_rfm_segments
-
-def test_rfm_quartiles_and_tiebreak(spark, tmp_path):
-    """Four customers engineered so each lands in a distinct quartile
-    on every axis; customers 2 and 3 tie on frequency (2 orders each)
-    and the custkey tiebreak must order them 2 then 3."""
-    def order(key, cust, day, total):
-        return (key, cust, _T0 + dt.timedelta(days=day), total)
-    rows = [order(1, 1, 10, 100.0), order(2, 1, 10, 100.0),
-            order(3, 1, 10, 100.0),
-            order(4, 2, 8, 100.0), order(5, 2, 8, 100.0),
-            order(6, 3, 6, 50.0), order(7, 3, 6, 50.0),
-            order(8, 4, 4, 10.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "customer_rfm_segments",
-                       ["orders"])
-    got = {(r["r_q"], r["f_q"], r["m_q"]):
-           (r["n_customers"], r["segment_cents"])
-           for _, r in out.iterrows()}
-    assert got == {("1", "1", "1"): ("1", "30000"),
-                   ("2", "2", "2"): ("1", "20000"),
-                   ("3", "3", "3"): ("1", "10000"),
-                   ("4", "4", "4"): ("1", "1000")}
-
-
-# -------------------------------------------------------- basket_part_pairs
-
-def test_basket_pairs_support_and_lift(spark, tmp_path):
-    """Baskets {1,2,3}, {1,2}, {2,3}, {9}: pairs (1,2) and (2,3) hit
-    support 2, (1,3) is pruned at support 1. With N=4 orders and
-    counts p1=2, p2=3, p3=2: lift_e4 = 10000*4*2 // 6 = 13333 for
-    both. A duplicated lineitem row (o1 lists part 2 twice) must NOT
-    inflate support — the basket is DISTINCT parts."""
-    rows = [(1, 1), (1, 2), (1, 2), (1, 3),
-            (2, 1), (2, 2),
-            (3, 2), (3, 3),
-            (4, 9)]
-    _write(spark, tmp_path, "lineitem",
-           "l_orderkey long, l_partkey long", rows)
-    out = _cross_check(spark, tmp_path, "basket_part_pairs",
-                       ["lineitem"])
-    got = {(r["pa"], r["pb"]): (r["support"], r["lift_e4"])
-           for _, r in out.iterrows()}
-    assert got == {("1", "2"): ("2", "13333"),
-                   ("2", "3"): ("2", "13333")}
-
-
-def test_basket_cap_drops_giant_order(spark, tmp_path):
-    """An order with 201 distinct parts exceeds the 200-part cap and
-    contributes NO pairs; a small order alongside it still does."""
-    rows = [(1, p) for p in range(201)] + [(2, 500), (2, 501),
-                                           (3, 500), (3, 501)]
-    _write(spark, tmp_path, "lineitem",
-           "l_orderkey long, l_partkey long", rows)
-    out = _cross_check(spark, tmp_path, "basket_part_pairs",
-                       ["lineitem"])
-    assert len(out) == 1
-    assert (out.iloc[0]["pa"], out.iloc[0]["pb"],
-            out.iloc[0]["support"]) == ("500", "501", "2")

@@ -452,8 +452,7 @@ def test_text_ops_null_text_cross_engine(spark, tmp_path):
             df[c] = df[c].astype(str)
         return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
-    for name in ("token_counts", "text_quality", "lang_heuristic",
-                 "fingerprints", "token_histogram",
+    for name in ("token_counts", "lang_heuristic",
                  "docs_repetition_ratio"):
         fn, sql = O.OPS[name]
         a = canon(fn(spark, str(tmp_path)).toPandas())
@@ -490,40 +489,6 @@ def test_lang_heuristic_covers_all_five_corpus_languages(spark, tmp_path):
             f"'{tmp_path}/documents.parquet/*.parquet'")
     b = con.sql(O.OPS["lang_heuristic"][1]).df().sort_values("doc_id")
     assert list(b["pred_lang"]) == list(a["pred_lang"])
-
-
-def test_deciles_approx_matches_exact_within_tolerance(spark):
-    """The percentile_approx banding twin agrees with the exact ntile op:
-    same customer total, same revenue total, per-band counts within the
-    tie/boundary drift bound (±2 at sf0.001 where bands hold 15
-    customers). The band ids are mirrored (exact is DESC — decile 1 =
-    highest value; approx is ASC — decile 1 = lowest)."""
-    sf = "/root/testdata/sf0.001"
-    exact = {r["decile"]: r for r in
-             O.q_customer_value_deciles(spark, sf).collect()}
-    approx = {r["decile"]: r for r in
-              O.q_customer_value_deciles_approx(spark, sf).collect()}
-    assert sum(r["n_customers"] for r in exact.values()) == \
-        sum(r["n_customers"] for r in approx.values())
-    assert sum(r["decile_revenue_c"] for r in exact.values()) == \
-        sum(r["decile_revenue_c"] for r in approx.values())
-    for d in range(1, 11):
-        e, a = exact[d], approx[11 - d]
-        assert abs(e["n_customers"] - a["n_customers"]) <= 2, \
-            (d, e["n_customers"], a["n_customers"])
-
-
-def test_deciles_approx_plan_has_no_sort(spark):
-    """The 10⁹-customer shape: the approx twin's physical plan must
-    contain no Sort at all (the exact op's global-window sort is the
-    scale-killer it replaces) and must broadcast the 1-row cutoffs."""
-    df = O.q_customer_value_deciles_approx(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Sort" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan
-    exact_plan = (O.q_customer_value_deciles(spark, "/root/testdata/sf0.001")
-                  ._jdf.queryExecution().executedPlan().toString())
-    assert "Sort" in exact_plan  # the contrast the docstring claims
 
 
 def _brute_force_pairs(rows: list[tuple], threshold=(4, 5)):
@@ -634,40 +599,6 @@ def test_contamination_fuzzy_known_answers_cross_engine(spark, tmp_path):
     want = {(int(r.doc_id), int(r.bench_id)): int(r.lev)
             for r in odf.itertuples()}
     assert got == want
-
-
-def test_triangle_counts_on_crafted_graph(spark):
-    """Degree-ordered triangle counting against a Python brute force on
-    a graph built to stress the orientation: a K5 (10 triangles, each
-    node in 6), a star hub of degree 12 (many wedges, ZERO triangles -
-    the shape the orientation exists to keep cheap), a 4-cycle (no
-    triangles), and one extra triangle hanging off the hub."""
-    import itertools
-
-    k5 = list(itertools.combinations(range(5), 2))
-    star = [(10, s) for s in range(11, 23)]
-    cycle = [(30, 31), (31, 32), (32, 33), (30, 33)]
-    hang = [(10, 11), (11, 23), (10, 23)]  # triangle through the hub
-    raw = set()
-    for a, b in k5 + star + cycle + hang:
-        raw.add((min(a, b), max(a, b)))
-    edges = sorted(raw)
-
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    want = {}
-    for a, b, c in itertools.combinations(sorted(adj), 3):
-        if b in adj[a] and c in adj[a] and c in adj[b]:
-            for v in (a, b, c):
-                want[v] = want.get(v, 0) + 1
-
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["doc_id"]: r["n_triangles"]
-           for r in O._triangle_counts(df).collect()}
-    assert got == want
-    assert sum(want.values()) == 3 * 11  # 10 K5 triangles + 1 hub one
 
 
 def test_source_mix_sample_flattens_skewed_corpus(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Known-answer + cross-engine tests for batch 22: exact-rational gap
-interpolation (with the deterministic gap injection) and the 2-D
-skyline via running maxima.
+interpolation (with the deterministic gap injection), lag
+autocorrelation and out-of-orderness.
 """
 
 import datetime as dt
@@ -56,21 +56,6 @@ def test_gap_interpolation_exact_rationals(spark, tmp_path):
     got = {int(r["day_idx"]): (int(r["interp_num"]), int(r["interp_den"]))
            for _, r in out.iterrows()}
     assert got == {1: (800, 4), 2: (1200, 4), 3: (1600, 4)}
-
-
-def test_skyline_corners(spark, tmp_path):
-    """(50,3) survives as cheapest; (100,10) twice — equal duplicates
-    don't dominate each other, both survive; (100,5) killed by the
-    equal-price-larger point; (200,10) killed by the strictly-cheaper
-    equal-size point; (200,15) survives (strictly larger than all
-    cheaper)."""
-    rows = [(1, 0.50, 3), (2, 1.00, 10), (3, 1.00, 10),
-            (4, 1.00, 5), (5, 2.00, 10), (6, 2.00, 15)]
-    _write(spark, tmp_path, "part",
-           "p_partkey long, p_retailprice double, p_size integer", rows)
-    out = _cross_check(spark, tmp_path, "part_skyline", ["part"])
-    assert sorted(int(r["p_partkey"]) for _, r in out.iterrows()) == [
-        1, 2, 3, 6]
 
 
 def test_autocorrelation_perfect_period2(spark, tmp_path):
@@ -138,22 +123,3 @@ def test_out_of_orderness_brute_force(spark, tmp_path):
                 n_late += 1
             run_max = t if run_max is None else max(run_max, t)
         assert got[uid] == (footrule, max_late, n_late), uid
-
-
-def test_width_bucket_boundaries(spark, tmp_path):
-    """Below-range → bucket 0; exactly lo → 1; an interior edge value
-    ((hi-lo)/20 above lo → bucket 2's lower edge) → 2; exactly hi →
-    21 (the overflow bucket is AT-or-above)."""
-    vals = [-2000.00,            # bal_c -200000 < lo → 0
-            -1000.00,            # exactly lo → 1
-            -450.00,             # lo + 55000 (one bucket = 55000) → 2
-            10000.00,            # exactly hi → 21
-            0.00]                # interior → 1 + 100000*20//1100000 = 2
-    rows = [(i, 1, float(v)) for i, v in enumerate(vals)]
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long, c_acctbal double", rows)
-    out = _cross_check(spark, tmp_path, "customer_balance_buckets",
-                       ["customer"])
-    got = {int(r["bucket"]): int(r["n_customers"])
-           for _, r in out.iterrows()}
-    assert got == {0: 1, 1: 1, 2: 2, 21: 1}

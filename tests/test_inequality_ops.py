@@ -1,6 +1,6 @@
 """Known-answer + cross-engine tests for batch 28: conditional bigram
-entropy (frozen-log exactness), weighted median (units vs lines), and
-the Gini pair (uniform → 0, concentrated → near (n−1)/n).
+entropy (frozen-log exactness) and the Gini pair (uniform → 0,
+concentrated → near (n−1)/n).
 """
 
 import datetime as dt
@@ -59,21 +59,6 @@ def test_conditional_entropy_known_values(spark, tmp_path):
     out2 = _cross_check(spark, tmp_path, "terms_conditional_entropy",
                         ["documents"])
     assert int(out2.iloc[0]["nh_millibits"]) == 0
-
-
-def test_weighted_median_units_not_lines(spark, tmp_path):
-    """Prices 100 (qty 1), 200 (qty 1), 300 (qty 8): the LINE median
-    is 200, but 8 of 10 units sit at 300 → the weighted median is 300
-    (2·cumw ≥ 10 first holds at price 300 since cum at 200 is 2)."""
-    _write(spark, tmp_path, "lineitem",
-           "l_returnflag string, l_extendedprice double, "
-           "l_quantity double",
-           [("N", 100.0, 1.0), ("N", 200.0, 1.0), ("N", 300.0, 8.0)])
-    out = _cross_check(spark, tmp_path, "lineitem_weighted_median",
-                       ["lineitem"])
-    r = out.iloc[0]
-    assert (r["l_returnflag"], int(r["wmedian_price_c"]),
-            int(r["total_units"])) == ("N", 30000, 10)
 
 
 def test_gini_uniform_zero_and_concentrated(spark, tmp_path):

@@ -34,7 +34,6 @@ def _canon(df):
     "events_linreg_exact",
     "semantic_dedup_medoid",
     "embedding_label_noise",
-    "tpch_sole_failure_suppliers",
 ])
 def test_partitioning_invariance_r7b(spark, name):
     """Shuffle width 1 vs 7: grouping and arrival order change, the

@@ -1,6 +1,5 @@
-"""Known-answer + cross-engine tests for the round-7 median/leakage op
-batch (parked for the r8 record window): two-pass histogram-refined
-exact median, train/test split-leakage audit, and MAD robust outliers.
+"""Known-answer + cross-engine tests for the train/test split-leakage
+audit and MAD robust outliers.
 """
 
 import datetime as dt
@@ -40,42 +39,6 @@ def _cross_check(spark, path, name, tables):
     b = b.sort_values(by=list(b.columns)).reset_index(drop=True)
     assert a.equals(b), f"{name}: Spark vs DuckDB mismatch\n{a}\n{b}"
     return a
-
-
-# ------------------------------------------------ lineitem_median_histogram
-
-def test_median_histogram_crosses_buckets(spark, tmp_path):
-    """Group AF: cents 5000,15000,25000,95000 (four DIV-10000 buckets,
-    even n) -> k=2, lower-middle = 15000, found in bucket 1 with
-    cum_before=1. Group NO: 7 rows all inside ONE bucket (values
-    30..36 cents around 9970-10030 span two buckets: 9970,9980,9990
-    in bucket 0 and 10010,10020,10030,10040 in bucket 1 -> n=7, k=4,
-    the target bucket is 1 and k_in_bucket=1 -> 10010."""
-    def li(flag, status, cents):
-        return (1, flag, status, cents / 100.0, _T0)
-    rows = ([li("A", "F", c) for c in (5000, 15000, 25000, 95000)]
-            + [li("N", "O", c) for c in (9970, 9980, 9990, 10010,
-                                         10020, 10030, 10040)])
-    _write(spark, tmp_path, "lineitem",
-           "l_orderkey long, l_returnflag string, l_linestatus string, "
-           "l_extendedprice double, l_shipdate timestamp", rows)
-    out = _cross_check(spark, tmp_path, "lineitem_median_histogram",
-                       ["lineitem"])
-    got = {(r["l_returnflag"], r["l_linestatus"]): r["median_cents"]
-           for _, r in out.iterrows()}
-    assert got == {("A", "F"): "15000", ("N", "O"): "10010"}
-
-
-def test_median_histogram_duplicate_values_at_boundary(spark, tmp_path):
-    """Five copies of the same value filling the target bucket: the
-    rank arithmetic must land inside the duplicates, not skip them."""
-    rows = [(1, "R", "F", 100.00, _T0)] * 5 + [(1, "R", "F", 999.00, _T0)]
-    _write(spark, tmp_path, "lineitem",
-           "l_orderkey long, l_returnflag string, l_linestatus string, "
-           "l_extendedprice double, l_shipdate timestamp", rows)
-    out = _cross_check(spark, tmp_path, "lineitem_median_histogram",
-                       ["lineitem"])
-    assert out.iloc[0]["median_cents"] == "10000"
 
 
 # ----------------------------------------------------- split_leakage_audit

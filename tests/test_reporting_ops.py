@@ -1,10 +1,6 @@
-"""Known-answer + cross-engine tests for the round-7 reporting /
-LM-statistics op batch (parked for the r8 record window):
-month-over-month + year-over-year deltas, Pareto cumulative share,
-and Kneser-Ney continuation counts.
+"""Known-answer + cross-engine tests for the Kneser-Ney continuation
+counts op.
 """
-
-import datetime as dt
 
 import duckdb
 import pytest
@@ -39,66 +35,6 @@ def _cross_check(spark, path, name, tables):
     b = b.sort_values(by=list(b.columns)).reset_index(drop=True)
     assert a.equals(b), f"{name}: Spark vs DuckDB mismatch\n{a}\n{b}"
     return a
-
-
-# ------------------------------------------------------------ orders_mom_yoy
-
-def test_mom_yoy_deltas_and_missing_priors(spark, tmp_path):
-    """Months 2023-12 (100), 2024-01 (200), 2024-12 (150): the first
-    month has no MoM prior (flag 0), January has no YoY prior, and
-    December's YoY compares across the 11-month gap in the month
-    series while its MoM compares against January — two different
-    lags over two different orderings."""
-    rows = [(1, 1, dt.datetime(2023, 12, 5), 100.0),
-            (2, 1, dt.datetime(2024, 1, 7), 200.0),
-            (3, 1, dt.datetime(2024, 12, 9), 150.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_mom_yoy", ["orders"])
-    got = {(r["y"], r["m"]): (r["mom_delta"], r["yoy_delta"],
-                              r["has_mom"], r["has_yoy"])
-           for _, r in out.iterrows()}
-    assert got == {("2023", "12"): ("0", "0", "0", "0"),
-                   ("2024", "1"): ("10000", "0", "1", "0"),
-                   ("2024", "12"): ("-5000", "5000", "1", "1")}
-
-
-# -------------------------------------------------------- orders_pareto_cume
-
-def test_pareto_head_boundary_inclusive(spark, tmp_path):
-    """Revenues 50/40/10: customer 2 crosses the 80% line (mass
-    strictly before it is 50% < 80%) and must be IN the head and in
-    the output via the boundary clause (rank 2, not a %7==1 rank);
-    customer 3 (before-mass 90%) is out of both."""
-    rows = [(1, 1, dt.datetime(2024, 1, 1), 50.0),
-            (2, 2, dt.datetime(2024, 1, 2), 40.0),
-            (3, 3, dt.datetime(2024, 1, 3), 10.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_pareto_cume",
-                       ["orders"])
-    got = {r["rank"]: (r["o_custkey"], r["share_e4"],
-                       r["cume_share_e4"], r["in_head"])
-           for _, r in out.iterrows()}
-    assert got == {"1": ("1", "5000", "5000", "1"),
-                   "2": ("2", "4000", "9000", "1")}
-
-
-def test_pareto_exact_80_excludes_next(spark, tmp_path):
-    """Revenues 80/10/6/4: customer 1 lands EXACTLY on 80% — the next
-    customer's strictly-before mass equals the threshold and must be
-    excluded (strict <, the standard cut)."""
-    rows = [(i + 1, i + 1, dt.datetime(2024, 1, i + 1), v)
-            for i, v in enumerate([80.0, 10.0, 6.0, 4.0])]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_pareto_cume",
-                       ["orders"])
-    got = {r["rank"]: r["in_head"] for _, r in out.iterrows()}
-    assert got == {"1": "1"}  # ranks 2-4 fail both output clauses
 
 
 # ------------------------------------------------- terms_continuation_counts

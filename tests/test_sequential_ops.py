@@ -1,6 +1,4 @@
-"""Known-answer + cross-engine tests for batch 26: the recursive
-double-clamped walk (with the case separating it from any windowed
-closed form), the sequential-key gap audit, and burstiness.
+"""Known-answer + cross-engine tests for the burstiness op.
 """
 
 import datetime as dt
@@ -39,56 +37,6 @@ def _cross_check(spark, path, name, tables):
     return a
 
 
-def test_points_walk_beats_clamped_cumsum(spark, tmp_path):
-    """Steps +300, +300, −400, +100 (via totalprice = (step+25)·100
-    dollars): true walk 300 → 500(clamp, hit) → 100 → 200; naive
-    clamp-of-cumsum would end at min(300, 500) = 300 — the sequential
-    dependency is visible in the OUTPUT, not just intermediates."""
-    steps = [300, 300, -400, 100]
-    rows = [(i + 1, 7, dt.datetime(1996, 1, 1 + i),
-             float((s + 25) * 100)) for i, s in enumerate(steps)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "customer_points_capped",
-                       ["orders"])
-    r = out.iloc[0]
-    assert (int(r["n_orders"]), int(r["final_balance"]),
-            int(r["n_saturated"])) == (4, 200, 1)
-    # the windowed impostor really does disagree
-    naive = min(sum(steps), 500)
-    assert naive == 300 != int(r["final_balance"])
-
-
-def test_points_walk_floor_clamp(spark, tmp_path):
-    """A deep negative step clamps at ZERO (not negative), and the
-    walk resumes from 0: +100, −300, +50 → 100, 0, 50."""
-    steps = [100, -300, 50]
-    rows = [(i + 1, 7, dt.datetime(1996, 1, 1 + i),
-             float((s + 25) * 100)) for i, s in enumerate(steps)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_orderdate timestamp, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "customer_points_capped",
-                       ["orders"])
-    r = out.iloc[0]
-    assert (int(r["final_balance"]), int(r["n_saturated"])) == (50, 0)
-
-
-def test_key_gap_audit_runs(spark, tmp_path):
-    """Keys 1..20 with 8–10 absent from the DATA, plus the injected
-    %97==13 drop: gaps (8,3) and (13,1) — consecutive missing keys
-    merge into one run."""
-    keys = [k for k in range(1, 21) if k not in (8, 9, 10)]
-    _write(spark, tmp_path, "orders", "o_orderkey long",
-           [(k,) for k in keys])
-    out = _cross_check(spark, tmp_path, "orders_key_gap_audit",
-                       ["orders"])
-    got = {int(r["gap_start"]): int(r["gap_len"])
-           for _, r in out.iterrows()}
-    assert got == {8: 3, 13: 1}
-
-
 def test_burstiness_constant_vs_bursty(spark, tmp_path):
     """Constant daily counts → Fano numerator 0; a bursty type (counts
     1 and 9 over two days) → num = 2·82 − 100 = 64, den = 2·10."""
@@ -110,44 +58,3 @@ def test_burstiness_constant_vs_bursty(spark, tmp_path):
                              int(r["fano_den"]))
            for _, r in out.iterrows()}
     assert got == {"flat": (2, 0, 12), "bursty": (2, 64, 20)}
-
-
-def test_full_outer_both_null_sides(spark, tmp_path):
-    """Region 0 kept with no kept nations → region-only row; nations
-    of dropped regions 2,3 → nation-only rows; region 1 matches."""
-    _write(spark, tmp_path, "region",
-           "r_regionkey long, r_name string",
-           [(0, "R0"), (1, "R1"), (2, "R2"), (3, "R3"), (4, "R4")])
-    _write(spark, tmp_path, "nation",
-           "n_nationkey long, n_name string, n_regionkey long",
-           [(1, "N1", 1), (2, "N2", 2), (3, "N3", 3), (4, "N4", 4)])
-    out = _cross_check(spark, tmp_path, "nation_region_full_outer",
-                       ["region", "nation"])
-    rows = {(r["nation"], r["region"]): (int(r["region_only"]),
-                                         int(r["nation_only"]))
-            for _, r in out.iterrows()}
-    nulls = ("None", "nan")
-    assert any(n in nulls and reg == "R0" and f == (1, 0)
-               for (n, reg), f in rows.items())          # region-only
-    assert any(n == "N2" and reg in nulls and f == (0, 1)
-               for (n, reg), f in rows.items())          # nation-only
-    assert rows[("N1", "R1")] == (0, 0)
-    assert rows[("N4", "R4")] == (0, 0)
-    assert len(rows) == 5
-
-
-def test_rank_family_tie_semantics(spark, tmp_path):
-    """Buckets [3,3,2,1] per one priority: rank = 1,1,3,4 (skips),
-    dense_rank = 1,1,2,3 (doesn't), row_number = 1,2,3,4 (orderkey
-    tiebreak inside the tie pair)."""
-    rows = [(1, "HIGH", 30000.0), (2, "HIGH", 30500.0),
-            (3, "HIGH", 20000.0), (4, "HIGH", 10000.0)]
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_orderpriority string, "
-           "o_totalprice double", rows)
-    out = _cross_check(spark, tmp_path, "orders_rank_family", ["orders"])
-    got = {int(r["o_orderkey"]): (int(r["rnk"]), int(r["drnk"]),
-                                  int(r["rn"]))
-           for _, r in out.iterrows()}
-    assert got == {1: (1, 1, 1), 2: (1, 1, 2),
-                   3: (3, 2, 3), 4: (4, 3, 4)}

@@ -1,6 +1,6 @@
 """Known-answer + cross-engine tests for the statistical-testing and
 semantics-parity batch: exact Mann–Whitney rank-sum, chi-square
-independence, NULL aggregate semantics, and ratio_to_report shares.
+independence and NULL aggregate semantics.
 All expectations are hand-computed.
 """
 
@@ -127,23 +127,3 @@ def test_null_group_and_skipped_nulls(spark, tmp_path):
             int(float(k0["sum_v"])), int(k0["n_distinct"])) == (3, 2, 6, 1)
     assert (int(knull["n_all"]), int(knull["n_nonnull"]),
             int(float(knull["sum_v"]))) == (2, 1, 7)
-
-
-# ------------------------------------------------- orders_percent_of_total
-
-def test_percent_of_total_rounding(spark, tmp_path):
-    """Nation 1: customers at 300/100 → 7500/2500 bp. Nation 2: three
-    equal customers → 3333 bp each (rounded integer division, the
-    thirds don't sum to 10000 — that's the honest answer)."""
-    _write(spark, tmp_path, "customer",
-           "c_custkey long, c_nationkey long",
-           [(1, 1), (2, 1), (3, 2), (4, 2), (5, 2)])
-    _write(spark, tmp_path, "orders",
-           "o_orderkey long, o_custkey long, o_totalprice double",
-           [(1, 1, 300.0), (2, 2, 100.0),
-            (3, 3, 50.0), (4, 4, 50.0), (5, 5, 50.0)])
-    out = _cross_check(spark, tmp_path, "orders_percent_of_total",
-                       ["customer", "orders"])
-    got = {int(r["c_custkey"]): int(r["share_bp"])
-           for _, r in out.iterrows()}
-    assert got == {1: 7500, 2: 2500, 3: 3333, 4: 3333, 5: 3333}

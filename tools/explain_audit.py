@@ -7,28 +7,21 @@ Writes BENCH/PLANS.md. Run: python tools/explain_audit.py [sf_dir]
 """
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 AUDITS = {
     # op -> list of (required substring, why)
-    "scan_filter_project": [
-        ("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity",
-         "predicate reaches the parquet scan"),
-        ("ReadSchema: struct<l_orderkey:bigint,l_linenumber",
-         "column pruning: only the 4 projected columns are read"),
-    ],
     "pricing_summary": [
         ("HashAggregate", "partial (map-side) aggregation before the shuffle"),
         ("PushedFilters: [IsNotNull(l_shipdate)",
          "date predicate pushed to the scan"),
-    ],
-    "segment_revenue": [
-        ("BroadcastHashJoin", "small dim (customer) broadcast, no shuffle join"),
     ],
     "region_revenue": [
         ("BroadcastHashJoin", "dims broadcast"),
@@ -40,17 +33,6 @@ AUDITS = {
         ("Expand", "grouping-set expansion inside ONE aggregation — no "
                    "per-subtotal extra pass"),
         ("Exchange", "single shuffle for all rollup levels"),
-    ],
-    "customers_with_orders": [
-        ("LeftSemi", "EXISTS planned as a semi-join: short-circuits on "
-                     "first match, never duplicates left rows"),
-        ("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice",
-         "the order-value predicate reaches the orders scan"),
-    ],
-    "orders_above_avg": [
-        ("BroadcastNestedLoopJoin",
-         "single-row scalar aggregate broadcast to the filter — computed "
-         "once, not per row"),
     ],
     "dedup_ngram_jaccard": [
         ("HashAggregate", "bucket-local pair generation (no self-join)"),
@@ -95,32 +77,6 @@ AUDITS = {
         ("* Project", "codegen'd projection (the * prefix marks "
                       "whole-stage codegen) — JVM-side, no Python UDF"),
     ],
-    "customers_without_orders": [
-        ("LeftAnti", "NOT EXISTS planned as an anti-join — no null-trap, "
-                     "no fan-out"),
-        ("PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice",
-         "the order-value predicate reaches the orders scan"),
-    ],
-    "orders_pivot": [
-        ("Scan parquet", "explicit pivot values ⇒ ONE scan (no "
-                         "key-discovery pre-pass over the data)", 1),
-        ("HashAggregate", "two-phase pivot aggregation: per-(status,"
-                          "priority) counts first, then the pivot agg — "
-                          "the second exchange carries only the grouped "
-                          "cells (|status|×|priority| rows), not data"),
-    ],
-    "lineitem_quantiles": [
-        ("Window", "integer-interpolated percentiles rank per group in "
-                   "one window (r6: replaced the double-interpolating "
-                   "percentile ObjectHashAggregate for cross-engine "
-                   "bit-stability)"),
-        ("HashAggregate", "the conditional pick-at-rank max aggregates "
-                          "map-side after the window"),
-    ],
-    "revenue_moving_avg": [
-        ("Window", "frame-bounded window over the tiny month series"),
-        ("HashAggregate", "monthly rollup aggregates map-side first"),
-    ],
     "events_asof_join": [
         ("Window", "union-tag + running last(non-null) — the scalable "
                    "as-of: ONE shuffle on the key, no per-row subquery, "
@@ -133,28 +89,6 @@ AUDITS = {
                    "window; the session rollup reuses the partitioning"),
         ("HashAggregate", "per-session aggregate is map-side partial "
                           "after the window"),
-    ],
-    "orders_above_customer_avg": [
-        ("Scan parquet", "decorrelated onto ONE orders scan (r9: the "
-                         "per-customer totals are window aggregates, "
-                         "not a groupBy joined back onto a second "
-                         "scan)", 1),
-        ("Window", "both per-customer totals ride one window over the "
-                   "custkey shuffle", 1),
-        ("Exchange", "a single keyed shuffle total", 1),
-        ("BroadcastHashJoin", "no join anywhere", 0),
-    ],
-    "orders_cube": [
-        ("Expand", "all four grouping sets expand inside ONE "
-                   "aggregation pass, not a pass per set"),
-        ("HashAggregate", "cube cells aggregate map-side first"),
-    ],
-    "customer_value_deciles": [
-        ("Window", "global ntile runs over the PRE-AGGREGATED "
-                   "|customers| rows (revenue cents grouped first), "
-                   "never raw orders"),
-        ("HashAggregate", "per-customer cents aggregate before the "
-                          "window; decile rollup after"),
     ],
     "docs_repetition_ratio": [
         ("Scan parquet", "pure per-row column expressions over one "
@@ -176,9 +110,6 @@ AUDITS = {
         ("Exchange", "EXACTLY one shuffle (conv_id) — turn ordering is an "
                      "in-batch sort, not a second window exchange", 1),
     ],
-    "dedup_clusters_audit": [
-        ("HashAggregate", "audit is one tiny aggregate over the labels"),
-    ],
     "stratified_sample": [
         ("Scan parquet", "pure-function sample = ONE codegen'd filter "
                          "over one scan — no sampling pass, no shuffle",
@@ -197,23 +128,10 @@ AUDITS = {
                                     "broadcast — computed once, not per "
                                     "row"),
         ("Window", "df via a window count on the term shuffle plus the "
-                   "per-doc top-k rank (2 Window + 2 WindowGroupLimit: "
-                   "the rank<=3 filter is pushed into the sort as a "
-                   "group-limit) — no df join-back", 4),
+                   "per-doc top-k rank — no df join-back", 2),
+        ("WindowGroupLimit", "the rank<=3 filter is pushed into the "
+                             "sort as a group-limit (partial + final)", 2),
         ("SortMergeJoin", "the former df-table join-back is gone", 0),
-    ],
-    "source_mix_weights": [
-        ("BroadcastNestedLoopJoin", "corpus totals broadcast as one row — "
-                                    "computed once, not per group"),
-    ],
-    "customer_value_deciles_approx": [
-        ("ObjectHashAggregate", "approx_percentile cutoffs via a "
-                                "partial-aggregable sketch, not a sort"),
-        ("BroadcastNestedLoopJoin", "1-row cutoff array broadcast back to "
-                                    "the banding scan"),
-        ("Sort", "the whole point of the approx twin: NO sort anywhere — "
-                 "the exact op's global-window sort is the 10⁹-customer "
-                 "scale-killer", 0),
     ],
     "pii_redact": [
         ("Exchange", "pure per-row regexp scrub: ZERO shuffle — the "
@@ -599,14 +517,6 @@ AUDITS = {
         ("Expand", "count_distinct over multiple columns plans as a "
                    "single Expand pass, not per-column rescans"),
     ],
-    "lineitem_median_histogram": [
-        ("BroadcastHashJoin", "the 6-row bucket directory broadcasts "
-                              "back; pass 2 touches only target-"
-                              "bucket rows"),
-        ("Scan parquet", "two passes = two scans (histogram, then "
-                         "bucket rescan) — never a full-group sort",
-         2),
-    ],
     "split_leakage_audit": [
         # r9: the near-dup op carries each doc's set size through the
         # exploded shingle stream, so the pair stage has NO join at all
@@ -634,45 +544,12 @@ AUDITS = {
         ("Exchange", "prefix/total/argmax windows all share ONE "
                      "user_id shuffle", 1),
         ("Window", "running sums, whole-partition totals, and the "
-                   "argmax pick are separate passes (plus a "
-                   "WindowGroupLimit prune) — all inside the one "
-                   "shuffle", 4),
+                   "argmax pick are separate passes — all inside the "
+                   "one shuffle", 3),
+        ("WindowGroupLimit", "the argmax pick is pruned by a "
+                             "group-limit first", 1),
         ("PushedFilters: [IsNotNull(user_id)",
          "the %7 decimation reaches the scan"),
-    ],
-    "customer_rfm_segments": [
-        ("SinglePartition", "the ntile sort runs over the CUSTOMER "
-                            "AGGREGATE, not the orders (the "
-                            "documented deciles caveat; swap for "
-                            "percentile_approx cutoffs at 10^9 "
-                            "customers)"),
-        ("BroadcastNestedLoopJoin", "the scalar max-day rides as a "
-                                    "broadcast 1-row join"),
-        ("HashAggregate", "per-customer triple partial-aggregates "
-                          "map-side"),
-    ],
-    "basket_part_pairs": [
-        ("HashAggregate", "basket collect + pair counts + part "
-                          "counts all partial-aggregate"),
-        ("CartesianProduct", "pairs explode WITHIN baskets (capped "
-                             "at 200 parts), never across the "
-                             "catalog", 0),
-        ("BroadcastNestedLoopJoin", "the scalar N rides as a "
-                                    "broadcast 1-row join"),
-    ],
-    "orders_mom_yoy": [
-        ("HashAggregate", "monthly totals partial-aggregate before "
-                          "the shuffle"),
-        ("Window", "MoM lag over the month series + YoY lag "
-                   "partitioned by month-of-year — both over the "
-                   "bounded month DIRECTORY", 2),
-    ],
-    "orders_pareto_cume": [
-        ("SinglePartition", "the global rank sorts the CUSTOMER "
-                            "AGGREGATE, not the orders (documented "
-                            "approx swap at 10^9 customers)"),
-        ("BroadcastNestedLoopJoin", "the corpus total rides as a "
-                                    "broadcast 1-row join"),
     ],
     "terms_continuation_counts": [
         ("HashAggregate", "distinct bigrams, continuation counts, "
@@ -688,44 +565,6 @@ AUDITS = {
         ("BroadcastNestedLoopJoin", "the correlation is an equi-join "
                                     "key", 0),
         ("CartesianProduct", "never a cartesian", 0),
-    ],
-    "tpch_volume_shipping": [
-        ("BroadcastHashJoin", "all four dims broadcast; only the "
-                              "lineitem-orders edge can shuffle"),
-        ("PushedFilters: [IsNotNull(l_shipdate)",
-         "the two-year ship window reaches the lineitem scan"),
-        ("CartesianProduct", "the nation-pair disjunction stays a "
-                             "residual, never degrades the join", 0),
-    ],
-    "tpch_disjunctive_join": [
-        ("BroadcastHashJoin", "Q19's OR-of-ANDs still plans as a hash "
-                              "join on l_partkey = p_partkey with the "
-                              "disjunction as residual"),
-        ("BroadcastNestedLoopJoin", "not a nested-loop", 0),
-        ("CartesianProduct", "not a cartesian", 0),
-    ],
-    "tpch_top_supplier": [
-        ("BroadcastHashJoin", "the one-row max joins back by broadcast "
-                              "— no driver collect for the scalar"),
-        ("PushedFilters: [IsNotNull(l_shipdate)",
-         "quarter window pushed to the scan"),
-    ],
-    "tpch_sole_failure_suppliers": [
-        ("LeftSemi", "EXISTS(other supplier) is a semi-join"),
-        ("LeftAnti", "NOT EXISTS(other returner) is an anti-join"),
-        ("CartesianProduct", "the suppkey inequality rides the "
-                             "orderkey equi-join as residual", 0),
-    ],
-    "tpch_small_qty_revenue": [
-        ("PushedFilters: [IsNotNull(p_brand), EqualTo(p_brand",
-         "brand filter reaches the part scan"),
-        ("BroadcastHashJoin", "filtered part dim broadcasts"),
-    ],
-    "tpch_inactive_premium_customers": [
-        ("LeftAnti", "no-recent-orders is an anti-join, not a "
-                     "correlated re-scan"),
-        ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
-         "the recency cutoff reaches the orders scan"),
     ],
     "orders_pipe_syntax": [
         ("PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate",
@@ -749,11 +588,6 @@ AUDITS = {
         ("In(event_type, [click,view])",
          "slice filter reaches the events scan"),
     ],
-    "orders_percent_of_total": [
-        ("BroadcastHashJoin", "customer dim broadcast"),
-        ("Window", "nation total via window, not a second "
-                   "aggregate+join"),
-    ],
     "semantic_dedup_medoid": [
         ("BroadcastHashJoin", "k medoid rows broadcast back to "
                               "members"),
@@ -772,27 +606,6 @@ AUDITS = {
                              "worse than none)"),
         ("SortMergeJoin", "no SMJ double-sort", 0),
     ],
-    "orders_xyz_classes": [
-        ("HashAggregate", "two bounded aggregates, map-side partials"),
-        ("CartesianProduct", "no join at all", 0),
-    ],
-    "part_skyline": [
-        ("Window", "the frontier is two window maxima after ONE sort "
-                   "— no inequality self-join"),
-        ("CartesianProduct", "never the O(n²) anti-join shape", 0),
-        ("BroadcastNestedLoopJoin", "no join at all", 0),
-    ],
-    "tpch_shipping_priority": [
-        ("TakeOrderedAndProject", "global top-10 is per-partition "
-                                  "heads merged, never a full sort"),
-        ("BroadcastHashJoin", "filtered customer dim broadcast"),
-        ("PushedFilters: [IsNotNull(l_shipdate), GreaterThan(l_shipdate",
-         "the ship-date cut reaches the lineitem scan"),
-    ],
-    "tpch_customer_distribution": [
-        ("LeftOuter", "the k=0 bucket needs the LEFT join — an inner "
-                      "join silently drops orderless customers"),
-    ],
     "events_autocorrelation": [
         ("BroadcastHashJoin", "the lag equi-join broadcasts the "
                               "7-row lag directory side or the tiny "
@@ -805,13 +618,15 @@ AUDITS = {
 
 def _count_nodes(plan: str, op: str) -> int:
     """Number of distinct plan nodes of type ``op`` in a formatted explain
-    (counts the detail headers, e.g. ``(3) Scan parquet``). Terms that are
-    not node headers (e.g. ``rangepartitioning``, which only appears in an
-    Exchange's argument line) fall back to a raw substring count so
-    count-0 absence checks still bite."""
+    (counts the detail headers, e.g. ``(3) Scan parquet``). The node name
+    must match whole: ``Window`` does not count ``WindowGroupLimit``.
+    Terms that are not node headers (e.g. ``rangepartitioning``, which
+    only appears in an Exchange's argument line) fall back to a count over
+    the whole plan text so count-0 absence checks still bite."""
     import re
-    n = len(re.findall(rf"^\(\d+\) {re.escape(op)}", plan, re.M))
-    return n if n else plan.count(op)
+    name = rf"{re.escape(op)}(?!\w)"
+    n = len(re.findall(rf"^\(\d+\) {name}", plan, re.M))
+    return n if n else len(re.findall(name, plan))
 
 
 def main():
@@ -856,7 +671,7 @@ def main():
     finally:
         spark.stop()
 
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote BENCH/PLANS.md; {len(failures)} check(s) failed")
     for name, needle in failures:

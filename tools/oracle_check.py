@@ -1,6 +1,10 @@
-"""Local replica of the driver's Spark-vs-DuckDB correctness gate."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+"""Spark-vs-DuckDB correctness gate: every OPS builder against its oracle.
+
+Usage: python tools/oracle_check.py [sf_dir] [op ...]
+Exits 1 when any op fails or mismatches its DuckDB oracle.
+"""
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
@@ -66,3 +70,4 @@ for name, (fn, sql) in OPS.items():
             print("   spark cols:", list(a.columns), "oracle cols:", list(b.columns))
 print("FAILS:", fails if fails else "none")
 spark.stop()
+sys.exit(1 if fails else 0)

@@ -65,22 +65,6 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # TPC-H-ish relational surface (SURVEY.md §2.0)
 # --------------------------------------------------------------------------
 
-def q_scan_filter_project(spark, sf_dir):
-    """Predicate + projection pushed into the parquet scan (verify with
-    .explain: PushedFilters + 3-column ReadSchema)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") > 45)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    )
-
-
-SQL_SCAN = """
-SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-FROM lineitem WHERE l_quantity > 45
-"""
-
-
 def q_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: map-side partial agg → single shuffle on the two
     group keys. Exact-integer emission (module docstring): quantities are
@@ -123,46 +107,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= DATE '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_orders(spark, sf_dir):
-    """Global top-k: per-partition top-k then merge (Spark's TakeOrdered)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .limit(10)
-    )
-
-
-SQL_TOP_ORDERS = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-"""
-
-
-def q_segment_revenue(spark, sf_dir):
-    """customer is the small side → explicit broadcast join, one shuffle for
-    the final groupBy."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_SEGMENT_REVENUE = """
-SELECT c_mktsegment, count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
 """
 
 
@@ -226,15 +170,6 @@ WHERE rn = 1
 """
 
 
-def q_distinct_priorities(spark, sf_dir):
-    return (_t(spark, sf_dir, "orders")
-            .select("o_orderstatus", "o_orderpriority").distinct())
-
-
-SQL_DISTINCT_PRIORITIES = \
-    "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
-
-
 def q_orders_rollup(spark, sf_dir):
     """ROLLUP aggregation (subtotal + grand-total rows): one shuffle, the
     rollup expansion happens inside the aggregation (Spark Expand node) —
@@ -254,422 +189,6 @@ SELECT o_orderstatus, o_orderpriority, count(*) AS order_cnt,
        CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
            AS revenue_c
 FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-"""
-
-
-def q_orders_cube(spark, sf_dir):
-    """CUBE aggregation — all four grouping sets of (status, priority):
-    the full-lattice complement of the ROLLUP op. Like rollup, the
-    expansion happens inside one aggregation (Spark Expand node feeding
-    a single shuffle), not one pass per grouping set; NULL group keys
-    mark subtotal rows identically in both engines. Exact-integer
-    revenue emission (module docstring)."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_ORDERS_CUBE = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-"""
-
-
-def q_customers_with_orders(spark, sf_dir):
-    """LEFT SEMI join (EXISTS shape): customers having at least one
-    high-value order. Semi-join short-circuits on first match and never
-    duplicates left rows — the scalable EXISTS strategy (the orders side
-    shuffles once on the join key; no fan-out)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_mktsegment")
-    big = (_t(spark, sf_dir, "orders")
-           .filter(F.col("o_totalprice") > 250000)
-           .select("o_custkey"))
-    return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi")
-
-
-SQL_CUSTOMERS_WITH_ORDERS = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE EXISTS (SELECT 1 FROM orders
-              WHERE o_custkey = c_custkey AND o_totalprice > 250000)
-"""
-
-
-def q_orders_above_avg(spark, sf_dir):
-    """Scalar-subquery filter: orders with price > 1.5× the global average.
-    The scalar aggregates in one tiny job and broadcasts as a single-row
-    cross input — no per-row recomputation. The boundary is an EXACT
-    integer predicate (price_c · 2n > 3 · Σprice_c, all bigint), so no
-    float threshold can flip a borderline row between engines."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    tot = o.agg(F.sum(cents).alias("sum_c"), F.count("*").alias("n"))
-    return (
-        o.withColumn("price_c", cents)
-        .crossJoin(F.broadcast(tot))
-        .filter(F.expr("price_c * 2 * n > 3 * sum_c"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-SQL_ORDERS_ABOVE_AVG = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM orders
-WHERE CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-      * 2 * (SELECT count(*) FROM orders)
-      > 3 * (SELECT sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-             FROM orders)
-"""
-
-
-def q_orders_above_customer_avg(spark, sf_dir):
-    """CORRELATED scalar subquery, decorrelated: orders above their own
-    customer's average price. The correlated form re-aggregates per
-    outer row; the scalable shape is the per-customer totals as window
-    aggregates over ONE custkey shuffle — a single keyed pass, no
-    per-row subquery, no second orders scan. Exact integer predicate
-    (price_c · n > Σprice_c per customer), so no float boundary can
-    flip a row between engines."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    # r9: both per-customer totals ride ONE window over the custkey
-    # shuffle instead of a groupBy joined back onto a second orders
-    # scan (the agg and probe legs had different children, so the scan
-    # ran twice; measured 0.52 → 0.35 s at sf0.1). Per-customer groups
-    # colocate identically under either shape.
-    w = Window.partitionBy("o_custkey")
-    return (o.withColumn("price_c", cents)
-            .withColumn("sum_c", F.sum("price_c").over(w))
-            .withColumn("n", F.count(F.lit(1)).over(w))
-            .filter(F.expr("price_c * n > sum_c"))
-            .select("o_orderkey", "o_custkey", "o_totalprice"))
-
-
-SQL_ORDERS_ABOVE_CUSTOMER_AVG = """
-SELECT o_orderkey, o_custkey, o_totalprice
-FROM (
-  SELECT o_orderkey, o_custkey, o_totalprice,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              OVER (PARTITION BY o_custkey) AS BIGINT) AS s,
-         count(*) OVER (PARTITION BY o_custkey) AS n
-  FROM orders
-  -- null-key contract parity: Spark's inner equi-join drops null
-  -- custkeys while a window PARTITION BY groups them — exclude
-  -- explicitly so the engines agree even on dirty data
-  WHERE o_custkey IS NOT NULL
-)
-WHERE c * n > s
-"""
-
-
-def q_customers_without_orders(spark, sf_dir):
-    """LEFT ANTI join (NOT EXISTS shape): customers with no high-value
-    order (the all-orders variant is empty on this testdata — the value
-    filter keeps the check non-degenerate). Anti-join is the scalable
-    negation strategy — one shuffle on the key, no fan-out, no null-trap
-    (unlike NOT IN). The probe side is filtered and projected to the key
-    column before the join so the shuffle carries 8 bytes a row."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal")
-    keys = (_t(spark, sf_dir, "orders")
-            .filter(F.col("o_totalprice") > 450000)
-            .select("o_custkey"))
-    return cust.join(keys, cust.c_custkey == keys.o_custkey, "left_anti")
-
-
-SQL_CUSTOMERS_WITHOUT_ORDERS = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-"""
-
-
-_PIVOT_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM",
-                     "4-NOT SPECIFIED", "5-LOW"]
-
-
-def q_orders_pivot(spark, sf_dir):
-    """PIVOT: order counts per status × priority, priorities as columns.
-    Explicit pivot values ⇒ single-pass aggregation (no extra distinct
-    job to discover keys) and a plan identical to conditional counts —
-    one shuffle on the groupBy key, map-side partials intact."""
-    df = (_t(spark, sf_dir, "orders")
-          .groupBy("o_orderstatus")
-          .pivot("o_orderpriority", _PIVOT_PRIORITIES)
-          .agg(F.count(F.lit(1))))  # count("*") is invalid inside pivot
-    renames = {p: f"p{p[0]}" for p in _PIVOT_PRIORITIES}
-    return df.select(
-        "o_orderstatus",
-        *[F.coalesce(F.col(f"`{p}`"), F.lit(0)).alias(renames[p])
-          for p in _PIVOT_PRIORITIES])
-
-
-SQL_ORDERS_PIVOT = """
-SELECT o_orderstatus,
-       count(*) FILTER (WHERE o_orderpriority = '1-URGENT')        AS p1,
-       count(*) FILTER (WHERE o_orderpriority = '2-HIGH')          AS p2,
-       count(*) FILTER (WHERE o_orderpriority = '3-MEDIUM')        AS p3,
-       count(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS p4,
-       count(*) FILTER (WHERE o_orderpriority = '5-LOW')           AS p5
-FROM orders GROUP BY o_orderstatus
-"""
-
-
-def q_lineitem_quantiles(spark, sf_dir):
-    """EXACT interpolated percentiles (p25/p50/p75 of extended price per
-    return flag), computed with pure INTEGER interpolation so both engines
-    agree bit-for-bit: prices quantize to cents, rank position
-    h = (n−1)·p is kept as an integer of percent-hundredths, and the
-    linear interpolation lo + (hi−lo)·frac becomes
-    lo_c·100 + (hi_c−lo_c)·(h mod 100) in dollars×10⁴. (Native
-    ``percentile``/``quantile_cont`` interpolate in doubles with
-    engine-specific formulas — a 1-ulp divergence flipped the rounded
-    hash at sf0.001.) Scale note: exact percentiles sort per group —
-    fine for a handful of groups; at web scale with high-cardinality
-    groups switch to ``percentile_approx`` (t-digest, bounded memory)
-    and a tolerance-based oracle."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
-        .alias("c"))
-    w = Window.partitionBy("l_returnflag").orderBy("c")
-    wall = Window.partitionBy("l_returnflag")
-    ranked = li.select(
-        "l_returnflag", "c",
-        F.row_number().over(w).alias("rn"),
-        F.lead("c").over(w).alias("nxt"),
-        F.count("*").over(wall).alias("n"))
-
-    def pick(p):
-        return F.max(F.expr(
-            f"CASE WHEN rn = ((n - 1) * {p}) DIV 100 + 1"
-            f" THEN c * 100 + (coalesce(nxt, c) - c)"
-            f" * (((n - 1) * {p}) % 100) END")).alias(f"p{p}_e4")
-
-    return (ranked.groupBy("l_returnflag")
-            .agg(pick(25), pick(50), pick(75),
-                 F.count("*").alias("n_items")))
-
-
-def _sql_quantile_pick(p: int) -> str:
-    return (f"max(CASE WHEN rn = ((n - 1) * {p}) // 100 + 1"
-            f" THEN c * 100 + (coalesce(nxt, c) - c)"
-            f" * (((n - 1) * {p}) % 100) END) AS p{p}_e4")
-
-
-SQL_LINEITEM_QUANTILES = f"""
-WITH v AS (
-  SELECT l_returnflag,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c
-  FROM lineitem
-), r AS (
-  SELECT l_returnflag, c,
-         row_number() OVER (PARTITION BY l_returnflag ORDER BY c) AS rn,
-         lead(c) OVER (PARTITION BY l_returnflag ORDER BY c) AS nxt,
-         count(*) OVER (PARTITION BY l_returnflag) AS n
-  FROM v
-)
-SELECT l_returnflag,
-       {_sql_quantile_pick(25)},
-       {_sql_quantile_pick(50)},
-       {_sql_quantile_pick(75)},
-       count(*) AS n_items
-FROM r GROUP BY l_returnflag
-"""
-
-
-def q_revenue_moving_avg(spark, sf_dir):
-    """Frame-bounded window aggregate: 3-month moving average of monthly
-    revenue. The monthly rollup shuffles once; the window runs over the
-    tiny month series (single partition is fine at any scale — months,
-    not rows). Exact-integer emission: monthly revenue in cents (bigint
-    sum), moving average via rounded integer division in dollars×10⁴."""
-    monthly = (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
-        .agg(F.sum(F.expr(
-            "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-            .alias("revenue_c")))
-    w = Window.orderBy("month").rowsBetween(-2, 0)
-    return (monthly
-            .withColumn("w_sum_c", F.sum("revenue_c").over(w))
-            .withColumn("w_cnt", F.count("*").over(w))
-            .select("month", "revenue_c", F.expr(
-                "(2 * w_sum_c * 100 + w_cnt) DIV (2 * w_cnt)")
-                .alias("moving_avg_3m_e4")))
-
-
-SQL_REVENUE_MOVING_AVG = """
-WITH monthly AS (
-  SELECT strftime(o_orderdate, '%Y-%m') AS month,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), fr AS (
-  SELECT month, revenue_c,
-         CAST(sum(revenue_c) OVER (ORDER BY month
-              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS w_sum_c,
-         count(*) OVER (ORDER BY month
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS w_cnt
-  FROM monthly
-)
-SELECT month, revenue_c,
-       CAST((2 * w_sum_c * 100 + w_cnt) // (2 * w_cnt) AS BIGINT)
-           AS moving_avg_3m_e4
-FROM fr
-"""
-
-
-def q_orders_except(spark, sf_dir):
-    """Set op: mid-value orders = >100k EXCEPT ALL >200k."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return (o.filter(F.col("o_totalprice") > 100000)
-            .exceptAll(o.filter(F.col("o_totalprice") > 200000)))
-
-
-SQL_ORDERS_EXCEPT = """
-SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 100000
-EXCEPT ALL
-SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 200000
-"""
-
-
-def q_part_strings(spark, sf_dir):
-    """Scalar string function family — whole-stage-codegen'd, no shuffle."""
-    return (
-        _t(spark, sf_dir, "part")
-        .select(
-            "p_partkey",
-            F.lower(F.col("p_name")).alias("name_lower"),
-            F.length("p_name").alias("name_len"),
-            F.regexp_extract("p_name", r"^(\w+)", 1).alias("first_word"),
-            F.substring(F.md5(F.col("p_name")), 1, 8).alias("name_hash8"),
-        )
-    )
-
-
-SQL_PART_STRINGS = """
-SELECT p_partkey, lower(p_name) AS name_lower, length(p_name) AS name_len,
-       regexp_extract(p_name, '^(\\w+)', 1) AS first_word,
-       substr(md5(p_name), 1, 8) AS name_hash8
-FROM part
-"""
-
-
-def q_orders_by_month(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("month", F.col("o_orderdate").cast("timestamp"))
-                 .alias("month"))
-        .agg(F.count("*").alias("order_cnt"),
-             F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("revenue_c"))
-    )
-
-
-SQL_ORDERS_BY_MONTH = """
-SELECT date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS month,
-       count(*) AS order_cnt,
-       CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS revenue_c
-FROM orders GROUP BY 1
-"""
-
-
-def q_events_stats(spark, sf_dir):
-    """Per-type counts + average value. ``value`` is 2-decimal → per-row
-    cents quantization, exact bigint sum, average emitted as value×10³
-    via rounded integer division (sum order can't move it)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"),
-             F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-             .alias("sum_c"),
-             F.countDistinct("user_id").alias("users"))
-        .select("event_type", "cnt",
-                F.expr("(2 * sum_c * 10 + cnt) DIV (2 * cnt)")
-                .alias("avg_value_e3"),
-                "users")
-    )
-
-
-def q_events_cardinality_approx(spark, sf_dir):
-    """HLL++ cardinality — THE 100 TB distinct-count tool, previously
-    missing from the inventory: exact ``count(DISTINCT)`` shuffles every
-    distinct (key, value) pair (state grows with cardinality — 10⁹ users
-    means 10⁹ shuffle rows), while ``approx_count_distinct`` keeps a
-    fixed-size mergeable HLL sketch per group, partial-aggregated
-    map-side like any sum.
-
-    Oracle shape: the exact per-type user count is verified
-    value-for-value cross-engine; the HLL estimate itself is
-    sketch-implementation-specific (DuckDB's HLL ≠ Spark's), so what's
-    recorded is a VERIFIED ERROR BOUND — ``hll_within_2pct`` computed by
-    Spark against its own exact count, emitted by the oracle as the
-    literal truth. A sketch drifting past the bound flips the flag and
-    the driver hash catches it. (rsd 0.5% ⇒ the 2% gate has 4σ margin;
-    at these cardinalities HLL++ sparse mode is exact anyway.)"""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("exact_users"),
-             F.expr("approx_count_distinct(user_id, 0.005)")
-             .alias("hll_users"))
-        .select("event_type", "exact_users",
-                (F.abs(F.col("hll_users") - F.col("exact_users")) * 50
-                 <= F.col("exact_users")).alias("hll_within_2pct"))
-    )
-
-
-SQL_EVENTS_CARDINALITY_APPROX = """
-SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-       true AS hll_within_2pct
-FROM events GROUP BY event_type
-"""
-
-
-SQL_EVENTS_STATS = """
-SELECT event_type, count(*) AS cnt,
-       CAST((2 * sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10
-             + count(*)) // (2 * count(*)) AS BIGINT) AS avg_value_e3,
-       count(DISTINCT user_id) AS users
-FROM events GROUP BY event_type
-"""
-
-
-def q_event_gaps(spark, sf_dir):
-    """LAG window over the event stream: inter-event gap seconds per user."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        _t(spark, sf_dir, "events")
-        .withColumn("prev_ts", F.lag("ts").over(w))
-        .filter(F.col("prev_ts").isNotNull())
-        .select("user_id", "event_id",
-                (F.unix_timestamp("ts")
-                 - F.unix_timestamp("prev_ts")).alias("gap_sec"))
-    )
-
-
-SQL_EVENT_GAPS = """
-SELECT user_id, event_id,
-       CAST(floor(epoch(ts)) AS BIGINT)
-       - CAST(floor(epoch(prev_ts)) AS BIGINT) AS gap_sec
-FROM (SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events)
-WHERE prev_ts IS NOT NULL
 """
 
 
@@ -811,22 +330,6 @@ FROM numbered GROUP BY user_id, session_seq
 """
 
 
-def q_events_json(spark, sf_dir):
-    """JSON path extraction from the props column."""
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_id",
-                F.get_json_object("props", "$.k").cast("int").alias("k_val"))
-        .filter(F.col("k_val").isNotNull())
-    )
-
-
-SQL_EVENTS_JSON = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
-"""
-
-
 # --------------------------------------------------------------------------
 # Text-analysis ops over documents (training-data pipeline)
 # --------------------------------------------------------------------------
@@ -850,47 +353,6 @@ SELECT doc_id,
        length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
            AS n_tokens,
        n_chars
-FROM documents
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    """Quality scoring: length, mean word length, stopword share —
-    length/punct heuristics in pure column expressions."""
-    d = _t(spark, sf_dir, "documents")
-    # coalesce(text, '') in both engines — see q_token_counts
-    n_tokens = F.size(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
-                              r"\s+"))
-    stop_hits = F.size(F.expr(
-        r"filter(split(trim(coalesce(text, '')), '\\s+'),"
-        r" w -> w IN ('the','a','and','of','to'))"))
-    return (d.select(
-        "doc_id", "n_chars",
-        n_tokens.alias("n_tokens"),
-        stop_hits.alias("stopword_hits"),
-        (F.col("n_chars") >= 100).cast("int").alias("len_ok"))
-        # n_chars / n_tokens as value×10³ by exact rounded integer
-        # division (both operands integral; no double ratio to round)
-        .select(
-            "doc_id", "n_tokens",
-            F.expr("(2000 * n_chars + n_tokens) DIV (2 * n_tokens)")
-            .alias("avg_token_len_e3"),
-            "stopword_hits", "len_ok"))
-
-
-SQL_TEXT_QUALITY = """
-SELECT doc_id,
-       length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
-           AS n_tokens,
-       (2000 * n_chars
-        + length(regexp_split_to_array(trim(coalesce(text, '')), '\\s+')))
-           // (2 * length(regexp_split_to_array(trim(coalesce(text, '')),
-                                                '\\s+')))
-           AS avg_token_len_e3,
-       length(list_filter(regexp_split_to_array(trim(coalesce(text, '')),
-              '\\s+'),
-              w -> w IN ('the','a','and','of','to'))) AS stopword_hits,
-       CAST(n_chars >= 100 AS INT) AS len_ok
 FROM documents
 """
 
@@ -1008,25 +470,6 @@ FROM (
     FROM (SELECT doc_id, lang,
                  substr(coalesce(text, ''), 1, 4096) AS pref_
           FROM documents)))
-"""
-
-
-def q_fingerprints(spark, sf_dir):
-    """Document fingerprinting: normalized-text content hash (md5 prefix —
-    hex-string form is engine-portable)."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id",
-                F.substring(F.md5(F.lower(F.trim(
-                    F.coalesce(F.col("text"), F.lit(""))))), 1, 16)
-                .alias("fingerprint"))
-    )
-
-
-SQL_FINGERPRINTS = """
-SELECT doc_id, substr(md5(lower(trim(coalesce(text, '')))), 1, 16)
-    AS fingerprint
-FROM documents
 """
 
 
@@ -1423,96 +866,6 @@ WHERE 5 * inter >= 4 * (sn - inter)
 """
 
 
-def q_dedup_graph_triangles(spark, sf_dir):
-    """Per-document triangle counts over the near-dup similarity graph
-    (edges = dedup_ngram_jaccard pairs): a triangle means three
-    documents that are pairwise near-duplicates — the local-clustering
-    signal that separates a true duplication CLUSTER (template farms,
-    mirror sites) from chains of borderline pairs, and the standard
-    prelude to deciding cluster-collapse aggressiveness.
-
-    Scale path — degree-ordered wedge join (the MapReduce triangle
-    algorithm of Suri & Vassilvitskii, WWW'11): each undirected edge is
-    ORIENTED from its lower-(degree, id) endpoint to the higher one, so
-    every node's out-degree is O(sqrt(m)) regardless of how skewed the
-    raw degree distribution is (a hub of degree 10⁶ would otherwise
-    spawn 10¹² wedges — same hot-key shape the dedup caps guard). Wedges
-    are generated only from out-edges (u→v, u→w with v before w in the
-    total order) and closed by an equi-join against the oriented edge
-    v→w; each triangle is found exactly once, at its lowest-order apex.
-    The (tiny) edge list is materialized ONCE before the wedge join
-    (r9: the degree union and the two degree join-backs have
-    non-identical children, so exchange reuse never covered them and
-    the jaccard subtree was evaluated up to 3× — measured 4.35 → 1.82 s
-    at sf0.1, 14.4 → 6.3 s at 25k docs; on a real cluster swap the
-    localCheckpoint for checkpoint()/a table write, as with
-    _cluster_edges).
-    """
-    edges = (q_dedup_ngram_jaccard(spark, sf_dir)
-             .select("id_a", "id_b").localCheckpoint(eager=True))
-    return _triangle_counts(edges)
-
-
-def _triangle_counts(edges: DataFrame) -> DataFrame:
-    """Degree-ordered triangle counting over an undirected edge list
-    (columns id_a < id_b, unique). See q_dedup_graph_triangles."""
-    deg = (edges.select(F.col("id_a").alias("v"))
-           .unionAll(edges.select(F.col("id_b").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg")))
-    da = deg.select(F.col("v").alias("id_a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("v").alias("id_b"), F.col("deg").alias("db"))
-    # total order = (degree, id); orient each edge low → high
-    keyed = (edges.join(da, "id_a").join(db, "id_b")
-             .withColumn("ka", F.struct(F.col("da").alias("d"),
-                                        F.col("id_a").alias("i")))
-             .withColumn("kb", F.struct(F.col("db").alias("d"),
-                                        F.col("id_b").alias("i"))))
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("id_a"))
-         .otherwise(F.col("id_b")).alias("src"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb"))
-         .otherwise(F.col("ka")).alias("dstk"),
-        F.when(F.col("ka") < F.col("kb"), F.col("id_b"))
-         .otherwise(F.col("id_a")).alias("dst"))
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = (e1.join(e2, (F.col("e1.src") == F.col("e2.src"))
-                      & (F.col("e1.dstk") < F.col("e2.dstk")))
-              .select(F.col("e1.src").alias("u"),
-                      F.col("e1.dst").alias("v"),
-                      F.col("e2.dst").alias("w")))
-    e3 = oriented.alias("e3")
-    tri = wedges.join(e3, (F.col("v") == F.col("e3.src"))
-                      & (F.col("w") == F.col("e3.dst")))
-    return (tri.select(F.col("u").alias("doc_id"))
-            .unionAll(tri.select(F.col("v").alias("doc_id")))
-            .unionAll(tri.select(F.col("w").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_triangles")))
-
-
-SQL_DEDUP_GRAPH_TRIANGLES = f"""
-WITH e AS (
-  SELECT id_a, id_b FROM ({SQL_DEDUP_NGRAM}) pairs
-), tri AS (
-  -- id_a < id_b on every edge, so the a<b<c 3-way equi-join
-  -- enumerates each triangle exactly once (no orientation needed at
-  -- oracle scale; the Spark side's degree orientation changes the
-  -- join geometry, not the result set)
-  SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-  FROM e e1
-  JOIN e e2 ON e2.id_a = e1.id_b
-  JOIN e e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
-FROM (
-  SELECT a AS doc_id FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-)
-GROUP BY doc_id
-"""
-
-
 #: Audit record of the most recent ``_min_label_cc`` run in this process
 #: ({"rounds": int, "converged": bool}); bench.py reads it after timing
 #: dedup_clusters so the round count lands in the artifact.
@@ -1675,20 +1028,6 @@ def q_dedup_keep_canonical(spark, sf_dir):
     )
 
 
-def q_dedup_clusters_audit(spark, sf_dir):
-    """Cluster-resolution audit (pattern: dedup_lsh_dropped_buckets): one
-    row (n_docs, n_clusters, converged). The oracle's recursive CTE is
-    converged by construction, so its ``converged`` is literal true — a
-    Spark run that hit the round cap hash-mismatches here rather than
-    passing on plausible-looking labels."""
-    labels, _rounds, converged = \
-        _min_label_cc(_cluster_edges(spark, sf_dir))
-    return labels.agg(
-        F.count("doc_id").alias("n_docs"),
-        F.countDistinct("cluster_id").alias("n_clusters"),
-        F.lit(bool(converged)).alias("converged"))
-
-
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE dedup_pairs AS (
   SELECT id_a, id_b FROM ({SQL_DEDUP_NGRAM}) t
@@ -1701,13 +1040,6 @@ WITH RECURSIVE dedup_pairs AS (
   SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
 )
 SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY 1
-"""
-
-SQL_DEDUP_CLUSTERS_AUDIT = f"""
-SELECT count(doc_id) AS n_docs,
-       count(DISTINCT cluster_id) AS n_clusters,
-       true AS converged
-FROM ({SQL_DEDUP_CLUSTERS}) c
 """
 
 SQL_DEDUP_KEEP_CANONICAL = f"""
@@ -1723,147 +1055,6 @@ SELECT d.doc_id, d.lang,
 FROM documents d
 ANTI JOIN dropped USING (doc_id)
 LEFT JOIN absorbed a ON d.doc_id = a.cluster_id
-"""
-
-
-def q_dedup_cluster_sizes(spark, sf_dir):
-    """Cluster-size distribution of the connected-component dedup — the
-    dataset-card number that shows whether near-dup mass sits in a few
-    mega-clusters (boilerplate explosion) or a long tail of pairs. Two
-    tiny aggregations downstream of the CC labels (cluster count ≪ doc
-    count); inherits the pointer-jumping CC's loud-fail convergence."""
-    labels, _rounds, _converged = \
-        _min_label_cc(_cluster_edges(spark, sf_dir))
-    sizes = (labels.groupBy("cluster_id")
-             .agg(F.count("*").alias("cluster_size")))
-    return (sizes.groupBy("cluster_size")
-            .agg(F.count("*").alias("n_clusters")))
-
-
-SQL_DEDUP_CLUSTER_SIZES = f"""
-WITH labels AS ({SQL_DEDUP_CLUSTERS}),
-sizes AS (
-  SELECT cluster_id, count(*) AS cluster_size FROM labels GROUP BY 1
-)
-SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1
-"""
-
-
-def q_customer_value_deciles(spark, sf_dir):
-    """NTILE decile segmentation of customers by lifetime revenue (the
-    classic value-banding window op). Revenue aggregates to exact
-    integer cents per customer FIRST (one keyed shuffle over |customers|
-    rows), then a global ntile(10) with a total order (revenue desc,
-    custkey) assigns bands deterministically in both engines.
-
-    Scale note: a global ORDER BY window is a single-partition sort —
-    fine over the pre-aggregated |customers| rows here, but at 10⁹+
-    customers swap the exact ntile for percentile_approx cutoffs
-    broadcast-joined back (tolerance oracle), as with the percentile
-    family."""
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    rev = (_t(spark, sf_dir, "orders")
-           .groupBy("o_custkey").agg(F.sum(cents).alias("revenue_c")))
-    w = Window.orderBy(F.desc("revenue_c"), F.asc("o_custkey"))
-    return (rev.withColumn("decile", F.ntile(10).over(w))
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("revenue_c").alias("decile_revenue_c"),
-                 F.min("revenue_c").alias("floor_revenue_c")))
-
-
-SQL_CUSTOMER_VALUE_DECILES = """
-WITH rev AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), banded AS (
-  SELECT o_custkey, revenue_c,
-         ntile(10) OVER (ORDER BY revenue_c DESC, o_custkey) AS decile
-  FROM rev
-)
-SELECT decile, count(*) AS n_customers,
-       CAST(sum(revenue_c) AS BIGINT) AS decile_revenue_c,
-       min(revenue_c) AS floor_revenue_c
-FROM banded GROUP BY decile
-"""
-
-
-def q_customer_value_deciles_approx(spark, sf_dir):
-    """Approx-percentile twin of customer_value_deciles — the shape you
-    run at 10⁹+ customers, where the exact op's global ORDER BY window
-    (single-partition sort) is the scale-killer.
-
-    Structure: revenue per customer in exact integer cents (one keyed
-    shuffle), then ``approx_percentile`` computes the 9 decile cutoffs
-    as a partial-aggregable sketch (no sort, no extra shuffle beyond the
-    tiny final merge), the 1-row cutoff array is broadcast back, and
-    each customer's band is a pure codegen'd expression
-    ``1 + count(cutoffs < revenue)``.  No global sort anywhere; no
-    driver-side collect (the cutoffs travel as a broadcast 1-row cross
-    join, same pattern as the ANN query tile).
-
-    Oracle exactness: with accuracy=10⁶ ≫ |customers|, Spark's
-    QuantileSummaries keeps every sample (targetError = n/accuracy < ½
-    forbids any compression merge, g≥1) and query(p) returns the element
-    at 1-based ascending rank ceil(p·n) — verified empirically for
-    n ∈ {7,10,23,100}.  DuckDB mirrors that rank pick via row_number;
-    k/10.0 parses/computes to bit-identical doubles in both engines, so
-    the cutoffs — and hence the bands — match exactly.  Banding is
-    integer-only (cents), so no float drift downstream.  Band counts
-    differ from the exact ntile op only by tie/boundary placement; the
-    tolerance pytest pins per-band count drift ≤ ε against the exact op.
-    """
-    cents = F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-    # rev feeds both the cutoff sketch and the banding scan, but needs
-    # neither a cache (which this op could never unpersist — it would
-    # pin executor storage for the rest of the session) nor a second
-    # scan: the two aggregate subtrees canonicalize identically, so AQE
-    # reuses the shuffle stage (ReusedExchange in the executed plan —
-    # verified at sf0.01)
-    rev = (_t(spark, sf_dir, "orders")
-           .groupBy("o_custkey").agg(F.sum(cents).alias("revenue_c")))
-    cuts = rev.agg(F.expr(
-        "approx_percentile(revenue_c, "
-        "array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D), "
-        "1000000)").alias("cuts"))
-    return (rev.crossJoin(F.broadcast(cuts))
-            .withColumn(
-                "decile",
-                (F.lit(1) + F.expr(
-                    "size(filter(cuts, c -> revenue_c > c))")).cast("long"))
-            .groupBy("decile")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("revenue_c").alias("decile_revenue_c"),
-                 F.min("revenue_c").alias("floor_revenue_c")))
-
-
-SQL_CUSTOMER_VALUE_DECILES_APPROX = """
-WITH rev AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue_c
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT revenue_c,
-         row_number() OVER (ORDER BY revenue_c) AS rk,
-         count(*) OVER () AS n
-  FROM rev
-), cuts AS (
-  SELECT r.revenue_c AS cut
-  FROM generate_series(1, 9) AS g(k)
-  JOIN ranked r ON r.rk = CAST(ceil((g.k / 10.0) * r.n) AS BIGINT)
-), banded AS (
-  SELECT o_custkey, revenue_c,
-         CAST(1 + (SELECT count(*) FROM cuts WHERE revenue_c > cut)
-              AS BIGINT) AS decile
-  FROM rev
-)
-SELECT decile, count(*) AS n_customers,
-       CAST(sum(revenue_c) AS BIGINT) AS decile_revenue_c,
-       min(revenue_c) AS floor_revenue_c
-FROM banded GROUP BY decile
 """
 
 
@@ -2289,115 +1480,6 @@ WHERE bit_count(xor(sa.simhash_hi, sb.simhash_hi))
 # --------------------------------------------------------------------------
 # Embedding similarity ops
 # --------------------------------------------------------------------------
-
-def q_token_histogram(spark, sf_dir):
-    """Token-count distribution per language (log2 buckets) — the length
-    histogram every dataset card reports and every curation pass filters
-    on. One groupBy over (lang, bucket); the bucket is a codegen'd
-    expression on the scan. Null text coalesces to '' (1 token) in BOTH
-    engines — Spark's size(split(NULL)) is -1 while DuckDB's len(NULL)
-    is NULL, so an uncoalesced null doc would diverge."""
-    n_tokens = F.size(F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))),
-                              r"\s+"))
-    bucket = F.floor(F.log2(F.greatest(n_tokens, F.lit(1)))).cast("int")
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy(F.col("lang"), bucket.alias("log2_tokens"))
-        .agg(F.count("*").alias("n_docs"),
-             F.min(n_tokens).alias("min_tokens"),
-             F.max(n_tokens).alias("max_tokens"))
-    )
-
-
-SQL_TOKEN_HISTOGRAM = """
-WITH t AS (
-  SELECT lang,
-         len(regexp_split_to_array(trim(coalesce(text, '')), '\\s+'))
-             AS n_tokens
-  FROM documents
-)
-SELECT lang,
-       CAST(floor(log2(greatest(n_tokens, 1))) AS INT) AS log2_tokens,
-       count(*) AS n_docs,
-       CAST(min(n_tokens) AS INT) AS min_tokens,
-       CAST(max(n_tokens) AS INT) AS max_tokens
-FROM t GROUP BY 1, 2
-"""
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization of the embedding column (per-vector
-    absmax scale) — the storage/serving transform a 100 TB embedding
-    table ships with (4× smaller, dot products in int8). Output is the
-    audit view (scale + L1 mass + first element) rather than the raw
-    int8 array so the cross-engine value-hash compares scalars, not
-    array-rendering conventions. All higher-order JVM expressions, no
-    shuffle, no Python."""
-    scale = F.expr(
-        "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")
-    q = ("transform(embedding,"
-         " x -> CAST(round(CAST(x AS DOUBLE) / _scale * 127) AS INT))")
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .withColumn("_scale", scale)
-        .filter(F.col("_scale") > 0)
-        .withColumn("_q", F.expr(q))
-        .select("vec_id",
-                # scale×10⁶ as bigint: floor(x·1e6 + 0.5) is one
-                # deterministic IEEE multiply + floor, identical in both
-                # engines (round(double, 6) is not)
-                F.expr("CAST(floor(_scale * 1000000 + 0.5) AS BIGINT)")
-                .alias("q_scale_e6"),
-                F.expr("aggregate(_q, 0L, (s, v) -> s + abs(v))")
-                .alias("q_l1"),
-                F.element_at("_q", 1).alias("q0"))
-    )
-
-
-SQL_EMBEDDING_QUANTIZE = """
-WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding,
-                  x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-), q AS (
-  SELECT vec_id, scale,
-         list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) / scale * 127) AS INT)) AS qv
-  FROM s WHERE scale > 0
-)
-SELECT vec_id, CAST(floor(scale * 1000000 + 0.5) AS BIGINT) AS q_scale_e6,
-       CAST(list_sum(list_transform(qv, v -> abs(v))) AS BIGINT) AS q_l1,
-       qv[1] AS q0
-FROM q
-"""
-
-
-def q_embedding_norms(spark, sf_dir):
-    """L2 norms via higher-order aggregate — JVM-side, vectorizable.
-    The square-sum folds the array IN ELEMENT ORDER in both engines (a
-    per-row array, not a distributed sum — no ordering hazard), and the
-    norm is emitted ×10³ via the deterministic floor formula instead of
-    ``round(double, 3)``."""
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id",
-                F.expr(
-                    "CAST(floor(sqrt(aggregate(embedding,"
-                    " CAST(0 AS DOUBLE),"
-                    " (s, x) -> s + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-                    " * 1000 + 0.5) AS BIGINT)").alias("l2_norm_e3"))
-    )
-
-
-SQL_EMBEDDING_NORMS = """
-SELECT vec_id,
-       CAST(floor(sqrt(list_sum(list_transform(embedding,
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 1000 + 0.5)
-            AS BIGINT) AS l2_norm_e3
-FROM embeddings
-"""
-
 
 def q_ann_topk_cosine(spark, sf_dir):
     """Brute-force cosine top-k for a query set (vec_id < 5, k=3).
@@ -2917,45 +1999,6 @@ WHERE substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 4)
 
 
 SQL_STRATIFIED_SAMPLE = _sql_stratified_sample()
-
-
-def q_source_mix_weights(spark, sf_dir):
-    """Training-mix weights per source: document/char counts and each
-    source's share of the corpus in BASIS POINTS — the input to mixture
-    reweighting. One groupBy shuffle over |sources| groups; the corpus
-    totals join back as a broadcast single row (computed once, not per
-    group). Shares are exact rounded integer division of bigint counts —
-    the r5 ``round(double, 4)`` emission hash-mismatched on a
-    representation tie."""
-    docs = _t(spark, sf_dir, "documents")
-    per_source = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"))
-    totals = docs.agg(F.count("*").alias("tot_docs"),
-                      F.sum("n_chars").alias("tot_chars"))
-    return (
-        per_source.crossJoin(F.broadcast(totals))
-        .select("source", "n_docs", "n_chars",
-                F.expr("(2 * n_docs * 10000 + tot_docs) DIV (2 * tot_docs)")
-                .alias("doc_frac_bp"),
-                F.expr("(2 * n_chars * 10000 + tot_chars)"
-                       " DIV (2 * tot_chars)")
-                .alias("char_frac_bp"))
-    )
-
-
-SQL_SOURCE_MIX_WEIGHTS = """
-SELECT source, count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CAST((2 * count(*) * 10000 + (SELECT count(*) FROM documents))
-            // (2 * (SELECT count(*) FROM documents)) AS BIGINT)
-           AS doc_frac_bp,
-       CAST((2 * sum(n_chars) * 10000
-             + (SELECT sum(n_chars) FROM documents))
-            // (2 * (SELECT sum(n_chars) FROM documents)) AS BIGINT)
-           AS char_frac_bp
-FROM documents GROUP BY source
-"""
 
 
 def q_source_mix_sample(spark, sf_dir):
@@ -5037,31 +4080,6 @@ FROM hops GROUP BY 1, 2, 3
 
 
 # --------------------------------------------------------------------------
-# Multimodal plumbing (payloads as opaque binary + typed metadata)
-# --------------------------------------------------------------------------
-
-def q_multimodal_meta(spark, sf_dir):
-    """Binary-payload plumbing: documents.text re-encoded as an opaque
-    binary column (stand-in for image/audio bytes — the container has no
-    codec libs, see trek_spark.spark.multimodal for the decode stubs);
-    length + content hash computed on the binary JVM-side."""
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-        .select("doc_id",
-                F.length("payload").alias("n_bytes"),
-                F.substring(F.md5(F.col("payload")), 1, 16).alias("payload_hash"))
-    )
-
-
-SQL_MULTIMODAL_META = """
-SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-       substr(md5(text), 1, 16) AS payload_hash
-FROM documents
-"""
-
-
-# --------------------------------------------------------------------------
 # Registry
 # --------------------------------------------------------------------------
 
@@ -7131,68 +6149,6 @@ SELECT 'n_chars',
 """
 
 
-def q_lineitem_median_histogram(spark, sf_dir):
-    """Exact per-group median by two-pass histogram refinement — the
-    formulation that survives groups too large to sort (reference
-    scope: none; the classic BigQuery/Hive exact-median rewrite).
-    Pass 1 histograms cents into DIV-10000 buckets per
-    (l_returnflag, l_linestatus) — a bounded directory, never the
-    rows. A window over THE DIRECTORY locates the bucket holding the
-    k-th element (k = (n+1) DIV 2, the lower-middle) and how many
-    elements precede it. Pass 2 rescans ONLY the target bucket's rows
-    (broadcast semi-join on the 6-row directory; the bucket predicate
-    prunes everything else) and row_numbers within it — each group
-    sorts ≤ one bucket's rows, not the whole group.
-
-    Oracle: the plain global per-group ROW_NUMBER median — hash
-    equality certifies the two-pass refinement finds the exact same
-    element. lineitem_quantiles is the sort-the-group shape; this is
-    its 10^10-rows-per-group replacement."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .select("l_returnflag", "l_linestatus",
-                  F.expr("CAST(floor(l_extendedprice * 100 + 0.5)"
-                         " AS BIGINT)").alias("cents"))
-          .withColumn("bucket", F.expr("cents DIV 10000")))
-    hist = (li.groupBy("l_returnflag", "l_linestatus", "bucket")
-            .agg(F.count("*").alias("bn")))
-    wg = Window.partitionBy("l_returnflag", "l_linestatus")
-    wcum = wg.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    directory = (hist
-                 .withColumn("n", F.sum("bn").over(wg))
-                 .withColumn("k", F.expr("(n + 1) DIV 2"))
-                 .withColumn("cum", F.sum("bn").over(wcum))
-                 .where((F.col("cum") >= F.col("k"))
-                        & (F.col("cum") - F.col("bn") < F.col("k")))
-                 .select("l_returnflag", "l_linestatus", "bucket",
-                         (F.col("k") - (F.col("cum") - F.col("bn")))
-                         .alias("k_in_bucket")))
-    w_in = wg.orderBy("cents")
-    return (li.join(F.broadcast(directory),
-                    ["l_returnflag", "l_linestatus", "bucket"])
-            .withColumn("rn", F.row_number().over(w_in))
-            .where(F.col("rn") == F.col("k_in_bucket"))
-            .select("l_returnflag", "l_linestatus",
-                    F.col("cents").alias("median_cents")))
-
-
-SQL_LINEITEM_MEDIAN_HISTOGRAM = """
-WITH li AS (
-  SELECT l_returnflag, l_linestatus,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM lineitem
-), ranked AS (
-  SELECT l_returnflag, l_linestatus, cents,
-         row_number() OVER (PARTITION BY l_returnflag, l_linestatus
-                            ORDER BY cents) AS rn,
-         count(*) OVER (PARTITION BY l_returnflag, l_linestatus) AS n
-  FROM li
-)
-SELECT l_returnflag, l_linestatus, cents AS median_cents
-FROM ranked WHERE rn = (n + 1) // 2
-"""
-
-
 def q_split_leakage_audit(spark, sf_dir):
     """Train/test contamination audit — near-duplicate document pairs
     that STRADDLE the dataset split (reference scope: none; the
@@ -7378,285 +6334,6 @@ QUALIFY row_number() OVER (PARTITION BY user_id
 """
 
 
-def q_customer_rfm_segments(spark, sf_dir):
-    """RFM (recency / frequency / monetary) quartile segmentation —
-    the classic customer-analytics coding (reference scope: none).
-    Per customer: R = days between their last order and the corpus
-    max date (smaller is better), F = order count, M = lifetime
-    cents. Each axis is ntile(4)-coded over customers (R ascending so
-    quartile 1 = most recent), and customers aggregate per 3-digit
-    segment code with counts — the output is the segment directory,
-    not the per-customer table.
-
-    Scale: one groupBy(custkey) pass builds the per-customer triple;
-    the three ntiles share ONE single-partition sort over the
-    CUSTOMER AGGREGATE (not the orders), the same documented caveat
-    as customer_value_deciles — at 10^9 customers swap ntile for
-    percentile_approx cutoffs (the deciles_approx precedent). The
-    corpus max date is a scalar broadcast."""
-    o = (_t(spark, sf_dir, "orders")
-         .select("o_custkey",
-                 F.expr("unix_timestamp(o_orderdate) DIV 86400")
-                 .alias("day"),
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    per_cust = (o.groupBy("o_custkey")
-                .agg(F.max("day").alias("last_day"),
-                     F.count("*").alias("freq"),
-                     F.sum("cents").alias("monetary")))
-    max_day = per_cust.agg(F.max("last_day").alias("mx"))
-    scored = (per_cust.join(F.broadcast(max_day))
-              .withColumn("recency",
-                          F.col("mx") - F.col("last_day")))
-    wr = Window.orderBy(F.asc("recency"), F.asc("o_custkey"))
-    wf = Window.orderBy(F.desc("freq"), F.asc("o_custkey"))
-    wm = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
-    coded = (scored
-             .withColumn("r_q", F.ntile(4).over(wr))
-             .withColumn("f_q", F.ntile(4).over(wf))
-             .withColumn("m_q", F.ntile(4).over(wm)))
-    return (coded.groupBy("r_q", "f_q", "m_q")
-            .agg(F.count("*").alias("n_customers"),
-                 F.sum("monetary").alias("segment_cents")))
-
-
-SQL_CUSTOMER_RFM_SEGMENTS = """
-WITH o AS (
-  SELECT o_custkey,
-         CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS day,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-), per_cust AS (
-  SELECT o_custkey, max(day) AS last_day, count(*) AS freq,
-         CAST(sum(cents) AS BIGINT) AS monetary
-  FROM o GROUP BY 1
-), scored AS (
-  SELECT *, (SELECT max(last_day) FROM per_cust) - last_day AS recency
-  FROM per_cust
-), coded AS (
-  SELECT ntile(4) OVER (ORDER BY recency ASC, o_custkey ASC) AS r_q,
-         ntile(4) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_q,
-         ntile(4) OVER (ORDER BY monetary DESC, o_custkey ASC) AS m_q,
-         monetary
-  FROM scored
-)
-SELECT r_q, f_q, m_q, count(*) AS n_customers,
-       CAST(sum(monetary) AS BIGINT) AS segment_cents
-FROM coded GROUP BY 1, 2, 3
-"""
-
-
-_BASKET_ORDER_CAP = 200
-
-
-def q_basket_part_pairs(spark, sf_dir):
-    """Market-basket co-occurrence — part pairs ordered together,
-    with support and integer-frozen lift (reference scope: none; the
-    association-rules first pass). The join key is the ORDER (pairs
-    explode within a basket, never across the catalog), with the
-    same hot-key discipline as the dedup family: baskets larger than
-    200 distinct parts are dropped BEFORE pair expansion (a single
-    10^5-item wholesale order would otherwise expand to 5·10^9
-    pairs); the cap is far above any test-corpus basket so the
-    oracle sees identical results. lift_e4 =
-    10000·N·cooc DIV (cnt_a·cnt_b) — exact integers, >10000 means
-    positively associated. Pairs below support 2 are pruned (noise
-    and output volume)."""
-    li = (_t(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    sized = (li.groupBy("l_orderkey")
-             .agg(F.sort_array(F.collect_list("l_partkey"))
-                  .alias("parts"))
-             .where(F.size("parts") <= _BASKET_ORDER_CAP)
-             .where(F.size("parts") >= 2))
-    pairs = sized.select(F.explode(F.expr(
-        "flatten(transform(sequence(1, size(parts) - 1),"
-        " i -> transform(sequence(0, i - 1),"
-        " j -> struct(parts[j] AS pa, parts[i] AS pb))))"))
-        .alias("p")).select("p.pa", "p.pb")
-    cooc = (pairs.groupBy("pa", "pb")
-            .agg(F.count("*").alias("support"))
-            .where(F.col("support") >= 2))
-    counts = (li.groupBy("l_partkey")
-              .agg(F.count_distinct("l_orderkey").alias("cnt")))
-    # scalar N rides the plan as a broadcast 1-row aggregate — no
-    # driver-side action at plan-construction time
-    n_orders = li.agg(
-        F.count_distinct("l_orderkey").alias("n_orders"))
-    ca = counts.select(F.col("l_partkey").alias("pa"),
-                       F.col("cnt").alias("cnt_a"))
-    cb = counts.select(F.col("l_partkey").alias("pb"),
-                       F.col("cnt").alias("cnt_b"))
-    return (cooc.join(ca, "pa").join(cb, "pb")
-            .join(F.broadcast(n_orders))
-            .select("pa", "pb", "support",
-                    F.expr("(10000 * n_orders * support)"
-                           " DIV (cnt_a * cnt_b)").alias("lift_e4")))
-
-
-SQL_BASKET_PART_PAIRS = f"""
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), sized AS (
-  SELECT l_orderkey, count(*) AS sz FROM li GROUP BY 1
-  HAVING count(*) BETWEEN 2 AND {_BASKET_ORDER_CAP}
-), pairs AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM li a JOIN li b ON a.l_orderkey = b.l_orderkey
-                     AND a.l_partkey < b.l_partkey
-  JOIN sized s ON a.l_orderkey = s.l_orderkey
-), cooc AS (
-  SELECT pa, pb, count(*) AS support FROM pairs GROUP BY 1, 2
-  HAVING count(*) >= 2
-), counts AS (
-  SELECT l_partkey, count(DISTINCT l_orderkey) AS cnt FROM li GROUP BY 1
-), n AS (
-  SELECT count(DISTINCT l_orderkey) AS n_orders FROM li
-)
-SELECT pa, pb, support,
-       (10000 * n.n_orders * support) // (ca.cnt * cb.cnt) AS lift_e4
-FROM cooc, n
-JOIN counts ca ON ca.l_partkey = pa
-JOIN counts cb ON cb.l_partkey = pb
-"""
-
-
-def q_orders_mom_yoy(spark, sf_dir):
-    """Month-over-month and year-over-year revenue deltas — the
-    reporting staple (reference scope: none). Orders aggregate to
-    (year, month) cents totals; MoM is lag(1) over the month series,
-    YoY is lag(1) over the SAME month across years (partition by
-    month-of-year). Deltas stay NULL-free with a -1 sentinel when no
-    prior period exists? No — here absolute deltas against 0 would
-    lie; missing priors surface as prev = -1 and delta computed only
-    when prev >= 0 (CASE-guarded, portable — no NULL-ordering in the
-    compare).
-
-    Scale: the month directory is bounded (12 rows per year of
-    history), so both windows run over an AGGREGATE, and the
-    single-partition month-series sort is the directory, never the
-    orders. One shuffle for the aggregate; everything after is
-    directory-sized."""
-    o = (_t(spark, sf_dir, "orders")
-         .select(F.year("o_orderdate").alias("y"),
-                 F.month("o_orderdate").alias("m"),
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    monthly = o.groupBy("y", "m").agg(F.sum("cents").alias("revenue"))
-    w_mom = Window.orderBy("y", "m")
-    w_yoy = Window.partitionBy("m").orderBy("y")
-    lagged = (monthly
-              .withColumn("prev_m",
-                          F.coalesce(F.lag("revenue").over(w_mom),
-                                     F.lit(-1).cast("bigint")))
-              .withColumn("prev_y",
-                          F.coalesce(F.lag("revenue").over(w_yoy),
-                                     F.lit(-1).cast("bigint"))))
-    return lagged.select(
-        "y", "m", "revenue",
-        F.when(F.col("prev_m") >= 0,
-               F.col("revenue") - F.col("prev_m"))
-        .otherwise(F.lit(0).cast("bigint")).alias("mom_delta"),
-        F.when(F.col("prev_y") >= 0,
-               F.col("revenue") - F.col("prev_y"))
-        .otherwise(F.lit(0).cast("bigint")).alias("yoy_delta"),
-        (F.col("prev_m") >= 0).cast("bigint").alias("has_mom"),
-        (F.col("prev_y") >= 0).cast("bigint").alias("has_yoy"))
-
-
-SQL_ORDERS_MOM_YOY = """
-WITH monthly AS (
-  SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS revenue
-  FROM orders GROUP BY 1, 2
-), lagged AS (
-  SELECT y, m, revenue,
-         coalesce(lag(revenue) OVER (ORDER BY y, m), -1) AS prev_m,
-         coalesce(lag(revenue) OVER (PARTITION BY m ORDER BY y), -1)
-           AS prev_y
-  FROM monthly
-)
-SELECT y, m, revenue,
-       CASE WHEN prev_m >= 0 THEN revenue - prev_m ELSE 0 END
-         AS mom_delta,
-       CASE WHEN prev_y >= 0 THEN revenue - prev_y ELSE 0 END
-         AS yoy_delta,
-       CAST(CASE WHEN prev_m >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS has_mom,
-       CAST(CASE WHEN prev_y >= 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS has_yoy
-FROM lagged
-"""
-
-
-def q_orders_pareto_cume(spark, sf_dir):
-    """Pareto / contribution analysis — customers ranked by revenue
-    with cumulative share, flagging the head that drives 80% of
-    revenue (reference scope: none; the 80/20 report). Shares are
-    integer-frozen: share_e4 = 10000·cents DIV total, cume_share_e4
-    from the running sum — no float division crosses the oracle. The
-    head flag uses the PREVIOUS row's cumulative (strictly-before
-    mass < 80%), so the customer that crosses the threshold is
-    included, which is the standard Pareto cut.
-
-    Scale: per-customer totals are one shuffle; the ranking window
-    is a global sort over the CUSTOMER AGGREGATE (the deciles
-    caveat, documented swap to approx cutoffs at 10^9 customers);
-    the corpus total rides as a broadcast 1-row aggregate. Output
-    decimated to every 7th rank plus all head-boundary rows."""
-    o = (_t(spark, sf_dir, "orders")
-         .select("o_custkey",
-                 F.expr("CAST(floor(o_totalprice * 100 + 0.5)"
-                        " AS BIGINT)").alias("cents")))
-    per_cust = o.groupBy("o_custkey").agg(F.sum("cents").alias("rev"))
-    total = per_cust.agg(F.sum("rev").alias("total"))
-    w = Window.orderBy(F.desc("rev"), F.asc("o_custkey"))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranked = (per_cust.join(F.broadcast(total))
-              .withColumn("rank", F.row_number().over(w))
-              .withColumn("cume", F.sum("rev").over(wrun))
-              .withColumn("share_e4",
-                          F.expr("(10000 * rev) DIV total"))
-              .withColumn("cume_share_e4",
-                          F.expr("(10000 * cume) DIV total"))
-              .withColumn("in_head",
-                          F.expr("CAST(10 * (cume - rev) < 8 * total"
-                                 " AS BIGINT)")))
-    return (ranked
-            .where((F.col("rank") % 7 == 1)
-                   | (F.col("cume_share_e4") >= 7500)
-                   & (F.expr("10 * (cume - rev) < 8 * total")))
-            .select("rank", "o_custkey", "rev", "share_e4",
-                    "cume_share_e4", "in_head"))
-
-
-SQL_ORDERS_PARETO_CUME = """
-WITH per_cust AS (
-  SELECT o_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS rev
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT o_custkey, rev,
-         row_number() OVER (ORDER BY rev DESC, o_custkey ASC) AS rank,
-         CAST(sum(rev) OVER (ORDER BY rev DESC, o_custkey ASC
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS BIGINT) AS cume,
-         (SELECT CAST(sum(rev) AS BIGINT) FROM per_cust) AS total
-  FROM per_cust
-)
-SELECT rank, o_custkey, rev,
-       (10000 * rev) // total AS share_e4,
-       (10000 * cume) // total AS cume_share_e4,
-       CAST(10 * (cume - rev) < 8 * total AS BIGINT) AS in_head
-FROM ranked
-WHERE rank % 7 = 1
-   OR ((10000 * cume) // total >= 7500
-       AND 10 * (cume - rev) < 8 * total)
-"""
-
-
 def q_terms_continuation_counts(spark, sf_dir):
     """Kneser–Ney continuation statistics — for each word, how many
     DISTINCT left contexts it follows (the KN lower-order weight
@@ -7724,473 +6401,9 @@ WHERE raw_freq >= 5
 # market-share ratio queries — all with exact-integer emission.
 # --------------------------------------------------------------------------
 
-_CENTS_P = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
 _DISC_E4 = (
     "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
     " * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))")
-
-
-def q_tpch_volume_shipping(spark, sf_dir):
-    """TPC-H Q7 (volume shipping): revenue between two trading nations
-    by (supplier nation, customer nation, ship year) for 1996–1997.
-    Join tree: lineitem↔orders is the one fact-fact shuffle; supplier,
-    customer, and both nation aliases broadcast. The nation-pair
-    disjunction ((N1→N2) OR (N2→N1)) is applied AFTER both nation
-    names are attached — Catalyst pushes each half to the dim scans.
-    At 100 TB the plan is unchanged: one SMJ/shuffle on l_orderkey,
-    dims stay broadcast."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") <= F.lit("1997-12-31")))
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
-    return (
-        li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_3") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_3")))
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-    )
-
-
-SQL_TPCH_VOLUME_SHIPPING = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       year(l_shipdate) AS l_year,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE l_shipdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
-  AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_2')
-       OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_3'))
-GROUP BY 1, 2, 3
-"""
-
-
-def q_tpch_market_share(spark, sf_dir):
-    """TPC-H Q8 (national market share): of all ECONOMY-type parts sold
-    to ASIA-region customers in 1996–1997, what share of discounted
-    revenue came from NATION_3 suppliers, per order year. The ratio is
-    emitted as the exact integer pair (nation_rev_e4, total_rev_e4)
-    plus a rounded-integer-division share in basis points — never a
-    float sum (module convention). The share CASE runs inside one
-    aggregate pass: no second scan for the numerator."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") <= F.lit("1997-12-31"))
-    ).select("o_orderkey", "o_custkey", "o_orderdate")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat_c = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), "n_regionkey")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat_s = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat_c), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat_s), F.col("s_nationkey") == F.col("sn_key"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.expr(
-                f"CASE WHEN supp_nation = 'NATION_3' THEN {_DISC_E4} ELSE 0 END"))
-            .alias("nation_rev_e4"),
-            F.sum(F.expr(_DISC_E4)).alias("total_rev_e4"))
-        .withColumn("share_bp", F.expr(
-            "(2 * nation_rev_e4 * 10000 + total_rev_e4) DIV (2 * total_rev_e4)"))
-    )
-
-
-SQL_TPCH_MARKET_SHARE = """
-WITH sold AS (
-  SELECT year(o_orderdate) AS o_year,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-         * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS rev_e4,
-         n2.n_name AS supp_nation
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-  WHERE o_orderdate BETWEEN DATE '1996-01-01' AND DATE '1997-12-31'
-)
-SELECT o_year,
-       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN rev_e4 ELSE 0 END)
-            AS BIGINT) AS nation_rev_e4,
-       CAST(sum(rev_e4) AS BIGINT) AS total_rev_e4,
-       CAST((2 * sum(CASE WHEN supp_nation = 'NATION_3' THEN rev_e4 ELSE 0 END)
-             * 10000 + sum(rev_e4)) // (2 * sum(rev_e4)) AS BIGINT) AS share_bp
-FROM sold GROUP BY 1
-"""
-
-
-def q_tpch_profit_by_nation(spark, sf_dir):
-    """TPC-H Q9 shape (product-type profit), adapted: no partsupp table
-    in this corpus (reference data model lacks it), so profit is the
-    discounted revenue sum — the join tree and grouping are the Q9
-    exercise (part-name LIKE filter, supplier nation, ship year).
-    The p_name filter broadcasts a pre-filtered part dim; lineitem
-    never scans parts that fail the LIKE."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").contains("widget")).select("p_partkey")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"),
-                 F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("profit_e4"),
-             F.count("*").alias("line_cnt"))
-    )
-
-
-SQL_TPCH_PROFIT_BY_NATION = """
-SELECT n_name AS nation, year(l_shipdate) AS l_year,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS profit_e4,
-       count(*) AS line_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY 1, 2
-"""
-
-
-def q_tpch_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 (promotion effect): per ship month, discounted revenue
-    from PROMO-type parts vs all parts, share in basis points. Exact
-    integers throughout; the promo flag is resolved by a broadcast
-    part join and the CASE folds into one aggregate pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"))
-        .agg(
-            F.sum(F.expr(
-                f"CASE WHEN p_type = 'PROMO' THEN {_DISC_E4} ELSE 0 END"))
-            .alias("promo_rev_e4"),
-            F.sum(F.expr(_DISC_E4)).alias("total_rev_e4"))
-        .withColumn("promo_bp", F.expr(
-            "(2 * promo_rev_e4 * 10000 + total_rev_e4) DIV (2 * total_rev_e4)"))
-    )
-
-
-SQL_TPCH_PROMO_REVENUE = """
-SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-       CAST(sum(CASE WHEN p_type = 'PROMO' THEN
-                CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                ELSE 0 END) AS BIGINT) AS promo_rev_e4,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS total_rev_e4,
-       CAST((2 * sum(CASE WHEN p_type = 'PROMO' THEN
-                     CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                     * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-                     ELSE 0 END) * 10000
-             + sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                   * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))))
-            // (2 * sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                        * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))))
-            AS BIGINT) AS promo_bp
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY 1
-"""
-
-
-def q_tpch_top_supplier(spark, sf_dir):
-    """TPC-H Q15 (top supplier): revenue per supplier over one quarter,
-    return the supplier(s) whose revenue equals the global max — the
-    scalar-max-over-an-aggregate shape (Q15's CREATE VIEW folded into
-    a CTE). The per-supplier aggregate is computed ONCE and reused for
-    both the max and the final filter (same subtree → AQE
-    ReusedExchange, the deciles_approx precedent); the max itself is
-    a broadcast one-row cross join, not a driver collect."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01")))
-    rev = (li.groupBy("l_suppkey")
-           .agg(F.sum(F.expr(_DISC_E4)).alias("total_revenue_e4")))
-    mx = rev.agg(F.max("total_revenue_e4").alias("mx"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.join(F.broadcast(mx), rev.total_revenue_e4 == mx.mx)
-        .join(F.broadcast(supp), rev.l_suppkey == supp.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue_e4")
-    )
-
-
-SQL_TPCH_TOP_SUPPLIER = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                  * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-              AS BIGINT) AS total_revenue_e4
-  FROM lineitem
-  WHERE l_shipdate >= DATE '1997-01-01' AND l_shipdate < DATE '1997-04-01'
-  GROUP BY 1
-)
-SELECT s_suppkey, s_name, total_revenue_e4
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue_e4 = (SELECT max(total_revenue_e4) FROM rev)
-"""
-
-
-def q_tpch_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17 (small-quantity-order revenue): for one brand, the
-    revenue from lines whose quantity is below 20% of that part's
-    average quantity. The correlated AVG subquery is decorrelated by
-    hand into a per-part aggregate joined back (what Catalyst does to
-    the SQL form); the threshold compare is exact-integer —
-    5·qty·cnt < Σqty — so no float average ever materializes.
-    Scale: the brand filter broadcasts; the per-part aggregate and
-    join-back shuffle on p_partkey only for the brand's lines."""
-    part = _t(spark, sf_dir, "part").filter(
-        F.col("p_brand") == "Brand#13").select("p_partkey")
-    li = (_t(spark, sf_dir, "lineitem")
-          .join(F.broadcast(part),
-                F.col("l_partkey") == F.col("p_partkey"))
-          .select("l_partkey",
-                  F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("qty_i"),
-                  F.expr(_CENTS_P).alias("price_c")))
-    per_part = (li.groupBy("l_partkey")
-                .agg(F.sum("qty_i").alias("sum_qty"),
-                     F.count("*").alias("cnt")))
-    return (
-        li.join(per_part, "l_partkey")
-        .filter(F.expr("5 * qty_i * cnt < sum_qty"))
-        .agg(F.sum("price_c").alias("small_qty_revenue_c"),
-             F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_SMALL_QTY_REVENUE = """
-WITH li AS (
-  SELECT l_partkey,
-         CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty_i,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_brand = 'Brand#13'
-), per_part AS (
-  SELECT l_partkey, sum(qty_i) AS sum_qty, count(*) AS cnt
-  FROM li GROUP BY 1
-)
-SELECT CAST(sum(price_c) AS BIGINT) AS small_qty_revenue_c,
-       count(*) AS n_lines
-FROM li JOIN per_part USING (l_partkey)
-WHERE 5 * qty_i * cnt < sum_qty
-"""
-
-
-def q_tpch_large_orders(spark, sf_dir):
-    """TPC-H Q18 (large-volume customer): orders whose total line
-    quantity exceeds 250 units, with the customer attached. The
-    HAVING-subquery-IN shape decorrelates to: aggregate lineitem on
-    l_orderkey, filter, then join orders + broadcast customer — one
-    shuffle on the fact key. Quantities are integral → bigint sums."""
-    li = _t(spark, sf_dir, "lineitem")
-    big = (li.groupBy("l_orderkey")
-           .agg(F.sum(F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)"))
-                .alias("sum_qty"))
-           .filter(F.col("sum_qty") > 250))
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-        .alias("o_totalprice_c"))
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate",
-                "o_totalprice_c", "sum_qty")
-    )
-
-
-SQL_TPCH_LARGE_ORDERS = """
-SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-       CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS o_totalprice_c,
-       sq.sum_qty
-FROM (
-  SELECT l_orderkey,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_qty
-  FROM lineitem GROUP BY 1 HAVING sum_qty > 250
-) sq
-JOIN orders ON sq.l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-
-def q_tpch_disjunctive_join(spark, sf_dir):
-    """TPC-H Q19 (discounted revenue, disjunctive predicate): an
-    OR-of-ANDs residual over three (brand, size range, quantity range)
-    clauses on top of the partkey equi-join. The exercise: Catalyst
-    must still extract l_partkey = p_partkey as the join key and keep
-    the disjunction as a residual filter (a naive planner degrades to
-    a cartesian). part is broadcast, so the whole query is one scan of
-    lineitem with zero shuffles before the final scalar aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    clause = (
-        "((p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15"
-        "  AND l_quantity BETWEEN 1 AND 11)"
-        " OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25"
-        "  AND l_quantity BETWEEN 10 AND 20)"
-        " OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35"
-        "  AND l_quantity BETWEEN 20 AND 30))")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .filter(F.expr(clause))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"),
-             F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_DISJUNCTIVE_JOIN = """
-SELECT CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4,
-       count(*) AS n_lines
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-       AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-def q_tpch_sole_failure_suppliers(spark, sf_dir):
-    """TPC-H Q21 shape (suppliers who kept orders waiting), adapted:
-    no commit/receipt dates in this corpus, so the "late" flag is
-    l_returnflag = 'R'. For each supplier: count orders where (a) the
-    supplier had a returned line, (b) EXISTS another supplier's line
-    on the same order, and (c) NOT EXISTS a returned line from any
-    other supplier. The double correlation maps to a left-semi then a
-    left-anti join on (orderkey, ≠suppkey) — both shuffles share the
-    l_orderkey partitioning, and AQE broadcasts the probe sides at
-    small SF. Counted at (supplier, order) grain (DISTINCT before the
-    count) so multi-line returns don't double-count."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey",
-                                              "l_returnflag")
-    l1 = (li.filter(F.col("l_returnflag") == "R")
-          .select("l_orderkey", "l_suppkey").distinct())
-    l2 = li.select(F.col("l_orderkey").alias("o2"),
-                   F.col("l_suppkey").alias("s2")).distinct()
-    l3 = (li.filter(F.col("l_returnflag") == "R")
-          .select(F.col("l_orderkey").alias("o3"),
-                  F.col("l_suppkey").alias("s3")).distinct())
-    cand = l1.join(
-        l2, (l1.l_orderkey == l2.o2) & (l1.l_suppkey != l2.s2), "left_semi")
-    sole = cand.join(
-        l3, (cand.l_orderkey == l3.o3) & (cand.l_suppkey != l3.s3),
-        "left_anti")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        sole.groupBy("l_suppkey")
-        .agg(F.count("*").alias("numwait"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
-        .select("s_name", "numwait")
-    )
-
-
-SQL_TPCH_SOLE_FAILURE_SUPPLIERS = """
-WITH pairs AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-), returned AS (
-  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-  WHERE l_returnflag = 'R'
-)
-SELECT s_name, count(*) AS numwait
-FROM returned l1
-JOIN supplier ON l1.l_suppkey = s_suppkey
-WHERE EXISTS (SELECT 1 FROM pairs l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM returned l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey)
-GROUP BY 1
-"""
-
-
-def q_tpch_inactive_premium_customers(spark, sf_dir):
-    """TPC-H Q22 shape (global sales opportunity), adapted: customers
-    whose account balance exceeds the average POSITIVE balance and who
-    placed no order since 1999 — counted and summed per nation (the
-    corpus has no phone column; nationkey replaces the phone prefix).
-    The above-average gate is exact-integer (bal_c · n_pos > sum_c,
-    strict), computed once and broadcast as a one-row cross join; the
-    no-recent-orders clause is a left-anti join against the date-
-    filtered orders scan (filter pushed to parquet)."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").alias("bal_c"))
-    pos = (cust.filter(F.col("bal_c") > 0)
-           .agg(F.sum("bal_c").alias("sum_c"), F.count("*").alias("n_pos")))
-    recent = (_t(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") >= F.lit("1999-01-01"))
-              .select("o_custkey").distinct())
-    return (
-        cust.crossJoin(F.broadcast(pos))
-        .filter(F.expr("bal_c * n_pos > sum_c"))
-        .join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count("*").alias("n_customers"),
-             F.sum("bal_c").alias("total_bal_c"))
-    )
-
-
-SQL_TPCH_INACTIVE_PREMIUM_CUSTOMERS = """
-WITH cust AS (
-  SELECT c_custkey, c_nationkey,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer
-), pos AS (
-  SELECT CAST(sum(bal_c) AS BIGINT) AS sum_c, count(*) AS n_pos
-  FROM cust WHERE bal_c > 0
-)
-SELECT c_nationkey, count(*) AS n_customers,
-       CAST(sum(bal_c) AS BIGINT) AS total_bal_c
-FROM cust, pos
-WHERE bal_c * n_pos > sum_c
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= DATE '1999-01-01')
-GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -8581,48 +6794,6 @@ SELECT nullif(user_id % 5, 4) AS nk,
        count(DISTINCT nullif(CAST(floor(value * 100 + 0.5) AS BIGINT)
              % 10, 0)) AS n_distinct
 FROM events GROUP BY 1
-"""
-
-
-def q_orders_percent_of_total(spark, sf_dir):
-    """Window-over-aggregate reporting shape (ratio_to_report): each
-    customer's revenue share of their nation's total, in basis points
-    by rounded integer division. One groupBy shuffle on (nation,
-    customer) + one window on nation reusing the same partitioning
-    prefix (no second exchange at scale since nation ⊂ the group
-    key... Catalyst plans the window on the nation key — the window
-    shuffle is the one unavoidable re-key from (nation, cust) to
-    (nation)). Customer dim broadcasts."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    per_cust = (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey)
-        .groupBy("c_nationkey", "c_custkey")
-        .agg(F.sum(F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-             .alias("rev_c")))
-    w = Window.partitionBy("c_nationkey")
-    return (
-        per_cust.withColumn("nation_rev_c", F.sum("rev_c").over(w))
-        .withColumn("share_bp", F.expr(
-            "(2 * rev_c * 10000 + nation_rev_c) DIV (2 * nation_rev_c)"))
-        .select("c_nationkey", "c_custkey", "rev_c", "share_bp")
-    )
-
-
-SQL_ORDERS_PERCENT_OF_TOTAL = """
-WITH per_cust AS (
-  SELECT c_nationkey, c_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-              AS BIGINT) AS rev_c
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY 1, 2
-)
-SELECT c_nationkey, c_custkey, rev_c,
-       CAST((2 * rev_c * 10000 + sum(rev_c) OVER (PARTITION BY c_nationkey))
-            // (2 * sum(rev_c) OVER (PARTITION BY c_nationkey))
-            AS BIGINT) AS share_bp
-FROM per_cust
 """
 
 
@@ -9348,58 +7519,6 @@ FROM ev
 # --------------------------------------------------------------------------
 
 
-def q_orders_xyz_classes(spark, sf_dir):
-    """XYZ inventory classification (the ABC/Pareto op's variability
-    twin): parts classed by the coefficient of variation of their
-    monthly demand. CV thresholds are EXACT integer algebra — CV² =
-    (n·Σq² − S²)/S², so "CV ≤ 1/4" is 16·(n·Σq² − S²) ≤ S² and
-    "CV ≤ 1/2" is 4·(n·Σq² − S²) ≤ S² — no sqrt, no float (the
-    z-score precedent: σ-style gates compare squares). n counts the
-    part's months WITH sales (deterministic horizon). Two bounded
-    aggregates: monthly sums shuffle on (part, month), then per-part."""
-    li = _t(spark, sf_dir, "lineitem")
-    monthly = (li.groupBy("l_partkey",
-                          F.date_format("l_shipdate", "yyyy-MM")
-                          .alias("m"))
-               .agg(F.sum(F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)"))
-                    .alias("q")))
-    return (
-        monthly.groupBy("l_partkey")
-        .agg(F.count("*").alias("n_months"),
-             F.sum("q").alias("s_qty"),
-             F.sum(F.expr("q * q")).alias("q2"))
-        .select(
-            "l_partkey", "n_months", "s_qty",
-            F.expr(
-                "CASE WHEN 16 * (n_months * q2 - s_qty * s_qty)"
-                " <= s_qty * s_qty THEN 'X'"
-                " WHEN 4 * (n_months * q2 - s_qty * s_qty)"
-                " <= s_qty * s_qty THEN 'Y'"
-                " ELSE 'Z' END").alias("xyz_class"))
-    )
-
-
-SQL_ORDERS_XYZ_CLASSES = """
-WITH monthly AS (
-  SELECT l_partkey, strftime(l_shipdate, '%Y-%m') AS m,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT) AS q
-  FROM lineitem GROUP BY 1, 2
-), per_part AS (
-  SELECT l_partkey, count(*) AS n_months,
-         CAST(sum(q) AS BIGINT) AS s_qty,
-         CAST(sum(q * q) AS BIGINT) AS q2
-  FROM monthly GROUP BY 1
-)
-SELECT l_partkey, n_months, s_qty,
-       CASE WHEN 16 * (n_months * q2 - s_qty * s_qty) <= s_qty * s_qty
-            THEN 'X'
-            WHEN 4 * (n_months * q2 - s_qty * s_qty) <= s_qty * s_qty
-            THEN 'Y'
-            ELSE 'Z' END AS xyz_class
-FROM per_part
-"""
-
-
 def q_events_seasonal_naive_error(spark, sf_dir):
     """Seasonal-naive forecast backtest: predict each day's event count
     with the count from the SAME WEEKDAY one week earlier (the
@@ -9669,54 +7788,6 @@ WHERE x2 IS NOT NULL AND x2 > x1 + 1
 """
 
 
-def q_part_skyline(spark, sf_dir):
-    """2-D skyline (Pareto frontier): parts not dominated on
-    (cheaper price, larger size) — the multi-objective shortlist
-    query. NOT the O(n²) anti-join: after one sort by price the
-    frontier falls out of two window maxima — a point is dominated iff
-    the max size over STRICTLY cheaper points (integer RANGE frame,
-    the orders_range_frame precedent) reaches its size, or an
-    equal-price point is strictly larger. O(n log n), one shuffle,
-    survives 10⁹ points where the naive inequality self-join is a
-    cartesian. Equal (price, size) duplicates don't dominate each
-    other (no strict coordinate) — both survive; the test pins that."""
-    part = _t(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.expr("CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)")
-        .alias("price_c"),
-        F.col("p_size").cast("long").alias("size"))
-    w_lt = (Window.orderBy("price_c")
-            .rangeBetween(Window.unboundedPreceding, -1))
-    w_eq = Window.partitionBy("price_c")
-    return (
-        part
-        .withColumn("m_lt", F.max("size").over(w_lt))
-        .withColumn("m_eq", F.max("size").over(w_eq))
-        .filter(F.expr(
-            "(m_lt IS NULL OR m_lt < size) AND m_eq = size"))
-        .select("p_partkey", "price_c", "size")
-    )
-
-
-SQL_PART_SKYLINE = """
-WITH pts AS (
-  SELECT p_partkey,
-         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_c,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-), marked AS (
-  SELECT p_partkey, price_c, size,
-         max(size) OVER (ORDER BY price_c
-             RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m_lt,
-         max(size) OVER (PARTITION BY price_c) AS m_eq
-  FROM pts
-)
-SELECT p_partkey, price_c, size
-FROM marked
-WHERE (m_lt IS NULL OR m_lt < size) AND m_eq = size
-"""
-
-
 # --------------------------------------------------------------------------
 # Batch 23: the remaining adaptable TPC-H queries — Q3, Q4 (adapted),
 # Q6, Q10, Q13. With the batch-12 heavyweights this covers 17 of the
@@ -9724,191 +7795,6 @@ WHERE (m_lt IS NULL OR m_lt < size) AND m_eq = size
 # need the partsupp table / shipmode+commitdate columns this corpus
 # doesn't carry.
 # --------------------------------------------------------------------------
-
-
-def q_tpch_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 (shipping priority): top-10 unshipped-revenue orders
-    for one market segment around a cutoff date. Broadcast the
-    filtered customer dim; one fact-fact shuffle on o_orderkey; the
-    global top-10 is TakeOrdered (per-partition heads merged on the
-    driver — never a full sort)."""
-    cutoff = "1997-06-15"
-    cust = (_t(spark, sf_dir, "customer")
-            .filter(F.col("c_mktsegment") == "BUILDING")
-            .select("c_custkey"))
-    orders = (_t(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") < F.lit(cutoff))
-              .select("o_orderkey", "o_custkey", "o_orderdate",
-                      "o_orderpriority"))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_shipdate") > F.lit(cutoff)))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-        .orderBy(F.desc("revenue_e4"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-SQL_TPCH_SHIPPING_PRIORITY = """
-SELECT o_orderkey, o_orderdate, o_orderpriority,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < DATE '1997-06-15'
-  AND l_shipdate > DATE '1997-06-15'
-GROUP BY 1, 2, 3
-ORDER BY revenue_e4 DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_tpch_order_priority_check(spark, sf_dir):
-    """TPC-H Q4 shape (order priority checking), adapted: no
-    commit/receipt dates in this corpus, so the EXISTS predicate is
-    "the order has a returned line" (l_returnflag = 'R') instead of
-    "a late line". Counts per priority for one quarter; the EXISTS is
-    a left-semi join against the column-pruned lineitem scan."""
-    orders = (_t(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1997-01-01"))
-                      & (F.col("o_orderdate") < F.lit("1997-04-01"))))
-    returned = (_t(spark, sf_dir, "lineitem")
-                .filter(F.col("l_returnflag") == "R")
-                .select("l_orderkey"))
-    return (
-        orders.join(returned, orders.o_orderkey == returned.l_orderkey,
-                    "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-SQL_TPCH_ORDER_PRIORITY_CHECK = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= DATE '1997-01-01'
-  AND o_orderdate < DATE '1997-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY 1
-"""
-
-
-def q_tpch_forecast_revenue(spark, sf_dir):
-    """TPC-H Q6 (forecasting revenue change): the pure scan-side
-    scalar — price×discount revenue from one year's low-quantity,
-    mid-discount lines. Every predicate pushes to the parquet scan;
-    the aggregate is one map-side partial + a 1-row combine. Revenue
-    here is price_c × disc_c (the Q6 definition multiplies BY the
-    discount, unlike the (1−disc) ops)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter((F.col("l_shipdate") >= F.lit("1997-01-01"))
-                  & (F.col("l_shipdate") < F.lit("1998-01-01"))
-                  & (F.col("l_discount") >= 0.05)
-                  & (F.col("l_discount") <= 0.07)
-                  & (F.col("l_quantity") < 24))
-        .agg(F.sum(F.expr(
-            "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-            " * CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"))
-            .alias("revenue_e4"),
-            F.count("*").alias("n_lines"))
-    )
-
-
-SQL_TPCH_FORECAST_REVENUE = """
-SELECT CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-            AS BIGINT) AS revenue_e4,
-       count(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= DATE '1997-01-01'
-  AND l_shipdate < DATE '1998-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24
-"""
-
-
-def q_tpch_returned_items(spark, sf_dir):
-    """TPC-H Q10 (returned item reporting): top-20 customers by
-    revenue lost to returns in one quarter, nation attached. Orders
-    date-filter pushes to its scan; customer and nation broadcast;
-    the top-20 is TakeOrdered with the customer-key tiebreak."""
-    orders = (_t(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= F.lit("1997-01-01"))
-                      & (F.col("o_orderdate") < F.lit("1997-04-01")))
-              .select("o_orderkey", "o_custkey"))
-    li = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_returnflag") == "R"))
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey",
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("c_acctbal_c"))
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal_c",
-                 F.col("n_name").alias("nation"))
-        .agg(F.sum(F.expr(_DISC_E4)).alias("revenue_e4"))
-        .orderBy(F.desc("revenue_e4"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-SQL_TPCH_RETURNED_ITEMS = """
-SELECT c_custkey, c_name,
-       CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS c_acctbal_c,
-       n_name AS nation,
-       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-                * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT)))
-            AS BIGINT) AS revenue_e4
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= DATE '1997-01-01'
-  AND o_orderdate < DATE '1997-04-01'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue_e4 DESC, c_custkey ASC
-LIMIT 20
-"""
-
-
-def q_tpch_customer_distribution(spark, sf_dir):
-    """TPC-H Q13 (customer distribution): how many customers placed
-    exactly k orders — INCLUDING k = 0, which forces the left outer
-    join (an inner join silently drops the zero bucket; the test
-    plants an orderless customer). Two-level aggregation: per-customer
-    counts shuffle on custkey, the k-histogram is bounded."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count")))
-    return (per_cust.groupBy("c_count")
-            .agg(F.count("*").alias("custdist")))
-
-
-SQL_TPCH_CUSTOMER_DISTRIBUTION = """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-  GROUP BY 1
-)
-GROUP BY 1
-"""
 
 
 def q_events_autocorrelation(spark, sf_dir):
@@ -10031,178 +7917,10 @@ FROM marked GROUP BY 1
 """
 
 
-def q_customer_balance_buckets(spark, sf_dir):
-    """Equi-width histogram via the ``width_bucket`` built-in —
-    semantics pinned against an arithmetic oracle (DuckDB has no
-    width_bucket): bucket 0 holds below-range, n+1 at-or-above-range,
-    interior buckets are 1 + ⌊(x−lo)·n/(hi−lo)⌋. Bounds and cents are
-    exact integers, so the internal double divide is exact and
-    boundary values land identically in both engines. One tiny
-    groupBy on a ≤22-value key."""
-    lo, hi, n = -100_000, 1_000_000, 20
-    cust = _t(spark, sf_dir, "customer").select(
-        F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-        .alias("bal_c"))
-    return (
-        cust.withColumn("bucket", F.expr(
-            f"CAST(width_bucket(bal_c, {lo}, {hi}, {n}) AS INT)"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_customers"),
-             F.min("bal_c").alias("min_bal_c"),
-             F.max("bal_c").alias("max_bal_c"))
-    )
-
-
-SQL_CUSTOMER_BALANCE_BUCKETS = """
-WITH cust AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer
-)
-SELECT CAST(CASE WHEN bal_c < -100000 THEN 0
-            WHEN bal_c >= 1000000 THEN 21
-            ELSE 1 + (bal_c - (-100000)) * 20 // (1000000 - (-100000))
-            END AS INT) AS bucket,
-       count(*) AS n_customers,
-       CAST(min(bal_c) AS BIGINT) AS min_bal_c,
-       CAST(max(bal_c) AS BIGINT) AS max_bal_c
-FROM cust GROUP BY 1
-"""
-
-
 # --------------------------------------------------------------------------
 # Batch 26: sequentially-dependent running computation via recursive
 # CTE, sequential-key completeness audit, and burstiness (Fano factor).
 # --------------------------------------------------------------------------
-
-
-def q_customer_points_capped(spark, sf_dir):
-    """DOUBLE-CLAMPED running walk — the classic sequential computation
-    NO window frame can express: bal_n = clamp(bal_{n−1} + step_n,
-    0, 500) with SIGNED steps (step = dollars DIV 100 − 25, so the
-    walk moves both ways). A monotone capped sum collapses to
-    min(cumsum, cap) and a redemption loop to cumsum mod cap — both
-    window-expressible; only the two-sided clamp with signed steps is
-    genuinely sequential (every later value depends on where earlier
-    clamps bit — the known-answer test has a case where naive
-    clamp-of-cumsum gives 300, the true walk 200). Spark 4's
-    recursive CTE walks each customer's orders in date order, one
-    level per order position (depth = max orders/customer). The
-    ranked order list is localCheckpointed — each recursion level
-    joins the materialized table, never re-runs the ranking (the
-    reach_hops lesson). Output: final balance + count of top-clamped
-    steps."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-               " DIV 10000 - 25").alias("step"))
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate",
-                                                "o_orderkey")
-    ranked = (orders.withColumn("rn", F.row_number().over(w))
-              .select("o_custkey", "rn", "step")
-              .localCheckpoint())
-    walked = spark.sql("""
-      WITH RECURSIVE acc(o_custkey, rn, bal, hits) AS (
-        SELECT o_custkey, rn, greatest(0, least(step, 500)),
-               CASE WHEN step >= 500 THEN 1 ELSE 0 END
-        FROM {ranked} WHERE rn = 1
-        UNION ALL
-        SELECT r.o_custkey, r.rn,
-               greatest(0, least(a.bal + r.step, 500)),
-               a.hits + CASE WHEN a.bal + r.step >= 500
-                        THEN 1 ELSE 0 END
-        FROM acc a JOIN {ranked} r
-          ON r.o_custkey = a.o_custkey AND r.rn = a.rn + 1
-      )
-      SELECT o_custkey, max(rn) AS n_orders,
-             CAST(max_by(bal, rn) AS BIGINT) AS final_balance,
-             CAST(max_by(hits, rn) AS BIGINT) AS n_saturated
-      FROM acc GROUP BY 1
-    """, ranked=ranked)
-    return walked
-
-
-SQL_CUSTOMER_POINTS_CAPPED = """
-WITH RECURSIVE ranked AS (
-  SELECT o_custkey,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_orderdate, o_orderkey) AS rn,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // 10000 - 25
-             AS step
-  FROM orders
-), acc(o_custkey, rn, bal, hits) AS (
-  SELECT o_custkey, rn, greatest(0, least(step, 500)),
-         CASE WHEN step >= 500 THEN 1 ELSE 0 END
-  FROM ranked WHERE rn = 1
-  UNION ALL
-  SELECT r.o_custkey, r.rn, greatest(0, least(a.bal + r.step, 500)),
-         a.hits + CASE WHEN a.bal + r.step >= 500 THEN 1 ELSE 0 END
-  FROM acc a JOIN ranked r
-    ON r.o_custkey = a.o_custkey AND r.rn = a.rn + 1
-)
-SELECT o_custkey, max(rn) AS n_orders,
-       CAST(max_by(bal, rn) AS BIGINT) AS final_balance,
-       CAST(max_by(hits, rn) AS BIGINT) AS n_saturated
-FROM acc GROUP BY 1
-"""
-
-
-def q_orders_key_gap_audit(spark, sf_dir):
-    """Sequential-key completeness audit: runs of MISSING o_orderkey
-    values (the ingestion-loss detector for keys that are supposed to
-    be dense). An empty result = the keyspace is dense. The synthetic
-    keys ARE dense, so holes are INJECTED (drop key % 97 == 13, both
-    engines — the engagement convention).
-
-    Scale shape (r7 ADVICE closed): the naive global ``lag() OVER
-    (ORDER BY key)`` forces every distinct key through ONE partition —
-    a scale-killer on a dense 100 TB keyspace. Instead the keyspace is
-    range-bucketed at B = ⌈√max_key⌉ and gaps split into two exhaustive,
-    disjoint classes: (a) WITHIN-bucket gaps from a lag window
-    PARTITIONED by bucket (fully parallel), and (b) CROSS-bucket gaps
-    between consecutive non-empty buckets, linked on the per-bucket
-    min/max DIRECTORY — ~√N rows, the only global window, the same
-    bounded-directory discipline as the other audit ops (empty buckets
-    between two non-empty ones collapse into one directory gap, which
-    is exactly the merged missing-run semantics). B = √N balances the
-    two sides: √(10^12) = 10^6-row directory over 10^6-key buckets."""
-    keys = (_t(spark, sf_dir, "orders")
-            .select("o_orderkey").distinct()
-            .filter(F.expr("o_orderkey % 97 != 13")))
-    hi = keys.agg(F.max("o_orderkey")).first()[0]  # 1-row scalar
-    b = max(int(math.isqrt(int(hi or 1))), 1)
-    bucketed = keys.withColumn("bkt", F.expr(f"o_orderkey DIV {b}"))
-    wb = Window.partitionBy("bkt").orderBy("o_orderkey")
-    within = (
-        bucketed.withColumn("prev", F.lag("o_orderkey").over(wb))
-        .filter(F.expr("prev IS NOT NULL AND o_orderkey > prev + 1"))
-        .select((F.col("prev") + 1).alias("gap_start"),
-                (F.col("o_orderkey") - F.col("prev") - 1).alias("gap_len"))
-    )
-    directory = (bucketed.groupBy("bkt")
-                 .agg(F.min("o_orderkey").alias("lo"),
-                      F.max("o_orderkey").alias("hi")))
-    wd = Window.orderBy("bkt")  # ~sqrt(N) directory rows only
-    cross = (
-        directory.withColumn("prev_hi", F.lag("hi").over(wd))
-        .filter(F.expr("prev_hi IS NOT NULL AND lo > prev_hi + 1"))
-        .select((F.col("prev_hi") + 1).alias("gap_start"),
-                (F.col("lo") - F.col("prev_hi") - 1).alias("gap_len"))
-    )
-    return within.unionAll(cross)
-
-
-SQL_ORDERS_KEY_GAP_AUDIT = """
-WITH keys AS (
-  SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 97 != 13
-), lagged AS (
-  SELECT o_orderkey, lag(o_orderkey) OVER (ORDER BY o_orderkey) AS prev
-  FROM keys
-)
-SELECT CAST(prev + 1 AS BIGINT) AS gap_start,
-       CAST(o_orderkey - prev - 1 AS BIGINT) AS gap_len
-FROM lagged
-WHERE prev IS NOT NULL AND o_orderkey > prev + 1
-"""
 
 
 def q_events_burstiness(spark, sf_dir):
@@ -10233,94 +7951,6 @@ SELECT event_type, count(*) AS n_days,
            AS fano_num,
        CAST(count(*) * sum(x) AS BIGINT) AS fano_den
 FROM daily GROUP BY 1
-"""
-
-
-# --------------------------------------------------------------------------
-# Batch 27: relational completeness — FULL OUTER join (the one join
-# type the suite lacked) and the rank-family tie semantics.
-# --------------------------------------------------------------------------
-
-
-def q_nation_region_full_outer(spark, sf_dir):
-    """FULL OUTER join — the last uncovered join type. Both unmatched
-    sides are INJECTED (the corpus is referentially intact, so a plain
-    full join degenerates to inner): regions kept {0,1,4} and nations
-    kept with n_regionkey ∈ {1,2,3,4} leave region 0 nation-less and
-    nations of regions 2/3 region-less. Null-side flags are emitted
-    explicitly (the null-handling is the point of the op); keys
-    coalesce across sides."""
-    region = (_t(spark, sf_dir, "region")
-              .filter(F.col("r_regionkey").isin(0, 1, 4)))
-    nation = (_t(spark, sf_dir, "nation")
-              .filter(F.col("n_regionkey").isin(1, 2, 3, 4)))
-    return (
-        nation.join(region,
-                    nation.n_regionkey == region.r_regionkey, "full_outer")
-        .select(
-            F.coalesce("n_regionkey", "r_regionkey").alias("regionkey"),
-            F.col("n_name").alias("nation"),
-            F.col("r_name").alias("region"),
-            F.expr("CAST(n_name IS NULL AS INT)").alias("region_only"),
-            F.expr("CAST(r_name IS NULL AS INT)").alias("nation_only"))
-    )
-
-
-SQL_NATION_REGION_FULL_OUTER = """
-SELECT coalesce(n_regionkey, r_regionkey) AS regionkey,
-       n_name AS nation, r_name AS region,
-       CAST(n_name IS NULL AS INT) AS region_only,
-       CAST(r_name IS NULL AS INT) AS nation_only
-FROM (SELECT * FROM nation WHERE n_regionkey IN (1, 2, 3, 4)) n
-FULL OUTER JOIN
-     (SELECT * FROM region WHERE r_regionkey IN (0, 1, 4)) r
-  ON n.n_regionkey = r.r_regionkey
-"""
-
-
-def q_orders_rank_family(spark, sf_dir):
-    """rank() vs dense_rank() vs row_number() on TIES — the semantics
-    triple every window implementation must agree on: revenue is
-    coarsened to $10k buckets so ties are guaranteed, rank/dense_rank
-    order by the COARSE key alone (ties share rank; rank skips,
-    dense_rank doesn't), while row_number carries the full
-    deterministic tiebreak (orderkey) that also picks which 5 rows per
-    priority are emitted."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority",
-        F.expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-               " DIV 1000000").alias("rev_bucket"))
-    w_coarse = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("rev_bucket"))
-    w_full = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("rev_bucket"), F.asc("o_orderkey"))
-    return (
-        orders
-        .withColumn("rnk", F.rank().over(w_coarse))
-        .withColumn("drnk", F.dense_rank().over(w_coarse))
-        .withColumn("rn", F.row_number().over(w_full))
-        .filter(F.col("rn") <= 5)
-        .select("o_orderpriority", "o_orderkey", "rev_bucket",
-                "rnk", "drnk", "rn")
-    )
-
-
-SQL_ORDERS_RANK_FAMILY = """
-WITH o AS (
-  SELECT o_orderkey, o_orderpriority,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) // 1000000
-             AS rev_bucket
-  FROM orders
-)
-SELECT o_orderpriority, o_orderkey, rev_bucket,
-       rank() OVER (PARTITION BY o_orderpriority
-                    ORDER BY rev_bucket DESC) AS rnk,
-       dense_rank() OVER (PARTITION BY o_orderpriority
-                          ORDER BY rev_bucket DESC) AS drnk,
-       row_number() OVER (PARTITION BY o_orderpriority
-                          ORDER BY rev_bucket DESC, o_orderkey ASC) AS rn
-FROM o
-QUALIFY rn <= 5
 """
 
 
@@ -10385,56 +8015,6 @@ SELECT CAST(sum(c12) AS BIGINT) AS n_bigrams,
                        AS BIGINT)))
             // sum(c12) AS BIGINT) AS h_mb_per_bigram
 FROM c12 JOIN c1 USING (w1)
-"""
-
-
-def q_lineitem_weighted_median(spark, sf_dir):
-    """QUANTITY-weighted median price per return flag — each line
-    votes with its quantity, so the answer is the price at which half
-    the UNITS (not half the lines) are cheaper: the first price (in
-    price order) whose running weight doubles past the total,
-    2·cumw ≥ W. Plain median() can't express it; one window + one
-    filtered aggregate per group can. All exact integers."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)")
-        .alias("price_c"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("qty"))
-    per_price = (li.groupBy("l_returnflag", "price_c")
-                 .agg(F.sum("qty").alias("w")))
-    w_run = (Window.partitionBy("l_returnflag").orderBy("price_c")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_tot = Window.partitionBy("l_returnflag")
-    return (
-        per_price
-        .withColumn("cumw", F.sum("w").over(w_run))
-        .withColumn("totw", F.sum("w").over(w_tot))
-        .filter(F.expr("2 * cumw >= totw"))
-        .groupBy("l_returnflag")
-        .agg(F.min("price_c").alias("wmedian_price_c"),
-             F.max("totw").alias("total_units"))
-    )
-
-
-SQL_LINEITEM_WEIGHTED_MEDIAN = """
-WITH per_price AS (
-  SELECT l_returnflag,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS price_c,
-         CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS BIGINT)
-             AS w
-  FROM lineitem GROUP BY 1, 2
-), run AS (
-  SELECT l_returnflag, price_c,
-         sum(w) OVER (PARTITION BY l_returnflag ORDER BY price_c
-                      ROWS UNBOUNDED PRECEDING) AS cumw,
-         sum(w) OVER (PARTITION BY l_returnflag) AS totw
-  FROM per_price
-)
-SELECT l_returnflag,
-       CAST(min(price_c) AS BIGINT) AS wmedian_price_c,
-       CAST(max(totw) AS BIGINT) AS total_units
-FROM run WHERE 2 * cumw >= totw
-GROUP BY 1
 """
 
 
@@ -10921,58 +8501,23 @@ FROM members WHERE rk = 1
 
 OPS: dict[str, tuple] = {
     # (spark_fn, oracle_sql_or_None)
-    "scan_filter_project": (q_scan_filter_project, SQL_SCAN),
     "pricing_summary": (q_pricing_summary, SQL_PRICING),
-    "top_orders": (q_top_orders, SQL_TOP_ORDERS),
-    "segment_revenue": (q_segment_revenue, SQL_SEGMENT_REVENUE),
     "region_revenue": (q_region_revenue, SQL_REGION_REVENUE),
     "latest_order_per_customer": (q_latest_order_per_customer, SQL_LATEST_ORDER),
-    "customer_value_deciles": (
-        q_customer_value_deciles, SQL_CUSTOMER_VALUE_DECILES),
-    "customer_value_deciles_approx": (
-        q_customer_value_deciles_approx, SQL_CUSTOMER_VALUE_DECILES_APPROX),
-    "orders_above_customer_avg": (
-        q_orders_above_customer_avg, SQL_ORDERS_ABOVE_CUSTOMER_AVG),
-    "distinct_priorities": (q_distinct_priorities, SQL_DISTINCT_PRIORITIES),
-    "orders_except": (q_orders_except, SQL_ORDERS_EXCEPT),
     "orders_rollup": (q_orders_rollup, SQL_ORDERS_ROLLUP),
-    "orders_cube": (q_orders_cube, SQL_ORDERS_CUBE),
-    "customers_with_orders": (
-        q_customers_with_orders, SQL_CUSTOMERS_WITH_ORDERS),
-    "orders_above_avg": (q_orders_above_avg, SQL_ORDERS_ABOVE_AVG),
-    "customers_without_orders": (
-        q_customers_without_orders, SQL_CUSTOMERS_WITHOUT_ORDERS),
-    "orders_pivot": (q_orders_pivot, SQL_ORDERS_PIVOT),
-    "lineitem_quantiles": (q_lineitem_quantiles, SQL_LINEITEM_QUANTILES),
-    "revenue_moving_avg": (q_revenue_moving_avg, SQL_REVENUE_MOVING_AVG),
-    "part_strings": (q_part_strings, SQL_PART_STRINGS),
-    "orders_by_month": (q_orders_by_month, SQL_ORDERS_BY_MONTH),
-    "events_stats": (q_events_stats, SQL_EVENTS_STATS),
-    "events_cardinality_approx": (
-        q_events_cardinality_approx, SQL_EVENTS_CARDINALITY_APPROX),
-    "event_gaps": (q_event_gaps, SQL_EVENT_GAPS),
     "events_asof_join": (q_events_asof_join, SQL_EVENTS_ASOF_JOIN),
     "events_sessionize": (q_events_sessionize, SQL_EVENTS_SESSIONIZE),
-    "events_json": (q_events_json, SQL_EVENTS_JSON),
     "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
-    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
     "docs_repetition_ratio": (q_docs_repetition_ratio,
                               SQL_DOCS_REPETITION_RATIO),
     "lang_heuristic": (q_lang_heuristic, SQL_LANG_HEURISTIC),
-    "fingerprints": (q_fingerprints, SQL_FINGERPRINTS),
     "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
     "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM),
     "dedup_hot_shingle_audit": (q_dedup_hot_shingle_audit,
                                 SQL_DEDUP_HOT_SHINGLE_AUDIT),
     "dedup_prefix_filter": (q_dedup_prefix_filter,
                             SQL_DEDUP_PREFIX_FILTER),
-    "dedup_graph_triangles": (q_dedup_graph_triangles,
-                              SQL_DEDUP_GRAPH_TRIANGLES),
     "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
-    "dedup_clusters_audit": (
-        q_dedup_clusters_audit, SQL_DEDUP_CLUSTERS_AUDIT),
-    "dedup_cluster_sizes": (
-        q_dedup_cluster_sizes, SQL_DEDUP_CLUSTER_SIZES),
     "dedup_keep_canonical": (
         q_dedup_keep_canonical, SQL_DEDUP_KEEP_CANONICAL),
     "render_conversations": (
@@ -10984,18 +8529,13 @@ OPS: dict[str, tuple] = {
         q_dedup_minhash_estimate, SQL_DEDUP_MINHASH_ESTIMATE),
     "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
     "dedup_simhash_pairs": (q_dedup_simhash_pairs, SQL_DEDUP_SIMHASH_PAIRS),
-    "token_histogram": (q_token_histogram, SQL_TOKEN_HISTOGRAM),
-    "embedding_quantize": (q_embedding_quantize, SQL_EMBEDDING_QUANTIZE),
-    "embedding_norms": (q_embedding_norms, SQL_EMBEDDING_NORMS),
     "ann_topk_cosine": (q_ann_topk_cosine, SQL_ANN_TOPK),
     "ann_topk_ivf": (q_ann_topk_ivf, SQL_ANN_TOPK_IVF),
     "ann_topk_ivf_mp": (q_ann_topk_ivf_mp, SQL_ANN_TOPK_IVF_MP),
     "ann_topk_ivf_kmeans": (
         q_ann_topk_ivf_kmeans, SQL_ANN_TOPK_IVF_KMEANS),
     "embedding_near_dup": (q_embedding_near_dup, SQL_EMBEDDING_NEAR_DUP),
-    "multimodal_meta": (q_multimodal_meta, SQL_MULTIMODAL_META),
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
-    "source_mix_weights": (q_source_mix_weights, SQL_SOURCE_MIX_WEIGHTS),
     "source_mix_sample": (q_source_mix_sample, SQL_SOURCE_MIX_SAMPLE),
     "benchmark_contamination": (
         q_benchmark_contamination, SQL_BENCHMARK_CONTAMINATION),
@@ -11090,8 +8630,6 @@ OPS: dict[str, tuple] = {
         q_events_rolling_median, SQL_EVENTS_ROLLING_MEDIAN),
     "docs_column_profile": (
         q_docs_column_profile, SQL_DOCS_COLUMN_PROFILE),
-    "lineitem_median_histogram": (
-        q_lineitem_median_histogram, SQL_LINEITEM_MEDIAN_HISTOGRAM),
     "split_leakage_audit": (
         q_split_leakage_audit,
         SQL_SPLIT_LEAKAGE_AUDIT.format(jaccard=SQL_DEDUP_NGRAM)),
@@ -11099,32 +8637,8 @@ OPS: dict[str, tuple] = {
         q_events_anomaly_mad, SQL_EVENTS_ANOMALY_MAD),
     "events_changepoint_cusum": (
         q_events_changepoint_cusum, SQL_EVENTS_CHANGEPOINT_CUSUM),
-    "customer_rfm_segments": (
-        q_customer_rfm_segments, SQL_CUSTOMER_RFM_SEGMENTS),
-    "basket_part_pairs": (
-        q_basket_part_pairs, SQL_BASKET_PART_PAIRS),
-    "orders_mom_yoy": (q_orders_mom_yoy, SQL_ORDERS_MOM_YOY),
-    "orders_pareto_cume": (
-        q_orders_pareto_cume, SQL_ORDERS_PARETO_CUME),
     "terms_continuation_counts": (
         q_terms_continuation_counts, SQL_TERMS_CONTINUATION_COUNTS),
-    "tpch_volume_shipping": (
-        q_tpch_volume_shipping, SQL_TPCH_VOLUME_SHIPPING),
-    "tpch_market_share": (q_tpch_market_share, SQL_TPCH_MARKET_SHARE),
-    "tpch_profit_by_nation": (
-        q_tpch_profit_by_nation, SQL_TPCH_PROFIT_BY_NATION),
-    "tpch_promo_revenue": (q_tpch_promo_revenue, SQL_TPCH_PROMO_REVENUE),
-    "tpch_top_supplier": (q_tpch_top_supplier, SQL_TPCH_TOP_SUPPLIER),
-    "tpch_small_qty_revenue": (
-        q_tpch_small_qty_revenue, SQL_TPCH_SMALL_QTY_REVENUE),
-    "tpch_large_orders": (q_tpch_large_orders, SQL_TPCH_LARGE_ORDERS),
-    "tpch_disjunctive_join": (
-        q_tpch_disjunctive_join, SQL_TPCH_DISJUNCTIVE_JOIN),
-    "tpch_sole_failure_suppliers": (
-        q_tpch_sole_failure_suppliers, SQL_TPCH_SOLE_FAILURE_SUPPLIERS),
-    "tpch_inactive_premium_customers": (
-        q_tpch_inactive_premium_customers,
-        SQL_TPCH_INACTIVE_PREMIUM_CUSTOMERS),
     "orders_pipe_syntax": (q_orders_pipe_syntax, SQL_ORDERS_PIPE_SYNTAX),
     "part_collated_brands": (
         q_part_collated_brands, SQL_PART_COLLATED_BRANDS),
@@ -11136,8 +8650,6 @@ OPS: dict[str, tuple] = {
         q_events_chi2_independence, SQL_EVENTS_CHI2_INDEPENDENCE),
     "events_null_semantics": (
         q_events_null_semantics, SQL_EVENTS_NULL_SEMANTICS),
-    "orders_percent_of_total": (
-        q_orders_percent_of_total, SQL_ORDERS_PERCENT_OF_TOTAL),
     "semantic_dedup_medoid": (
         q_semantic_dedup_medoid, SQL_SEMANTIC_DEDUP_MEDOID),
     "embedding_label_noise": (
@@ -11158,7 +8670,6 @@ OPS: dict[str, tuple] = {
     "terms_zipf_slope": (q_terms_zipf_slope, SQL_TERMS_ZIPF_SLOPE),
     "events_linreg_exact": (
         q_events_linreg_exact, SQL_EVENTS_LINREG_EXACT),
-    "orders_xyz_classes": (q_orders_xyz_classes, SQL_ORDERS_XYZ_CLASSES),
     "events_seasonal_naive_error": (
         q_events_seasonal_naive_error, SQL_EVENTS_SEASONAL_NAIVE_ERROR),
     "orders_shuffle_hash_join": (
@@ -11170,36 +8681,13 @@ OPS: dict[str, tuple] = {
     "tables_fingerprint": (q_tables_fingerprint, SQL_TABLES_FINGERPRINT),
     "events_gap_interpolation": (
         q_events_gap_interpolation, SQL_EVENTS_GAP_INTERPOLATION),
-    "part_skyline": (q_part_skyline, SQL_PART_SKYLINE),
-    "tpch_shipping_priority": (
-        q_tpch_shipping_priority, SQL_TPCH_SHIPPING_PRIORITY),
-    "tpch_order_priority_check": (
-        q_tpch_order_priority_check, SQL_TPCH_ORDER_PRIORITY_CHECK),
-    "tpch_forecast_revenue": (
-        q_tpch_forecast_revenue, SQL_TPCH_FORECAST_REVENUE),
-    "tpch_returned_items": (
-        q_tpch_returned_items, SQL_TPCH_RETURNED_ITEMS),
-    "tpch_customer_distribution": (
-        q_tpch_customer_distribution, SQL_TPCH_CUSTOMER_DISTRIBUTION),
     "events_autocorrelation": (
         q_events_autocorrelation, SQL_EVENTS_AUTOCORRELATION),
     "events_out_of_orderness": (
         q_events_out_of_orderness, SQL_EVENTS_OUT_OF_ORDERNESS),
-    "customer_balance_buckets": (
-        q_customer_balance_buckets, SQL_CUSTOMER_BALANCE_BUCKETS),
-    "customer_points_capped": (
-        q_customer_points_capped, SQL_CUSTOMER_POINTS_CAPPED),
-    "orders_key_gap_audit": (
-        q_orders_key_gap_audit, SQL_ORDERS_KEY_GAP_AUDIT),
     "events_burstiness": (q_events_burstiness, SQL_EVENTS_BURSTINESS),
-    "nation_region_full_outer": (
-        q_nation_region_full_outer, SQL_NATION_REGION_FULL_OUTER),
-    "orders_rank_family": (
-        q_orders_rank_family, SQL_ORDERS_RANK_FAMILY),
     "terms_conditional_entropy": (
         q_terms_conditional_entropy, SQL_TERMS_CONDITIONAL_ENTROPY),
-    "lineitem_weighted_median": (
-        q_lineitem_weighted_median, SQL_LINEITEM_WEIGHTED_MEDIAN),
     "events_gini_concentration": (
         q_events_gini_concentration, SQL_EVENTS_GINI_CONCENTRATION),
     "quality_classifier": (q_quality_classifier, SQL_QUALITY_CLASSIFIER),

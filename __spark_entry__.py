@@ -28,9 +28,11 @@ def entry(spark: SparkSession) -> DataFrame:
     # AQE partition-coalescing note (round-2 VERDICT wrong #5): no scoped
     # conf is needed here — extract_turns uses repartition(N, cols) with an
     # EXPLICIT N, which AQE never coalesces (verified empirically: 8
-    # distinct partition ids with coalescePartitions.enabled=true). The
-    # scoped_conf in run_extraction_job/bench stays as belt-and-braces for
-    # plans where the partition count is optimizer-chosen.
+    # distinct partition ids with coalescePartitions.enabled=true).
+    # run_extraction_job scopes coalescing off around its wave writes only,
+    # as belt-and-braces for plans where the partition count is
+    # optimizer-chosen, and runs its metrics aggregate outside that scope
+    # so AQE can shrink it.
     extracted = extract_turns(transcripts, num_partitions=8)
     return (
         extracted.join(F.broadcast(golden), ["conv_id", "turn_idx"], "left")

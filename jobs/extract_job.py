@@ -31,7 +31,10 @@ def main() -> None:
     ap.add_argument("--input-format", default="parquet",
                     choices=["parquet", "iceberg"])
     ap.add_argument("--output", required=True)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="extraction partitions per wave (default: sized "
+                         "per wave from its rows, between the default "
+                         "parallelism and 4x it)")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--part-buckets", type=int, default=64)
     ap.add_argument("--no-resume", action="store_true")

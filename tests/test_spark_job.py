@@ -1,5 +1,9 @@
 """Spark-level integration tests: corpus → salted extraction → per-turn
-equality, checkpoint resume, metrics (north-rule surface)."""
+equality, checkpoint resume, metrics (north-rule surface).
+
+Parity tests run on the reference fixture corpus; job-mechanics tests
+(resume, crashes, wave sizing, salting, skew, sinks, metrics) run on the
+seeded ``synthetic_transcripts`` corpus and need no reference."""
 
 import json
 import os
@@ -7,7 +11,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from trek_spark.spark.corpus import build_golden, build_transcripts
+from trek_spark.spark.corpus import (
+    build_golden,
+    build_transcripts,
+    synthetic_transcripts,
+)
 from trek_spark.spark.job import extract_turns, run_extraction_job
 from trek_spark.spark.session import get_spark
 
@@ -65,11 +73,11 @@ def test_metrics_columns_populated(extracted):
     assert row.d > 0 and row.w >= 0
 
 
-def test_metrics_not_inflated(spark, extracted, tmp_path_factory):
+def test_metrics_not_inflated(spark, tmp_path_factory):
     """Round-1 ADVICE: batch metrics stamped per row must not multiply —
     docs_in summed over the metrics table equals the actual row count."""
     out = str(tmp_path_factory.mktemp("metrics"))
-    transcripts = build_transcripts(spark).limit(30)
+    transcripts = synthetic_transcripts(spark, 10, 3, seed=1)
     r = run_extraction_job(spark, transcripts, out, num_partitions=8,
                            part_buckets=8)
     metrics = spark.read.parquet(os.path.join(out, "metrics"))
@@ -85,7 +93,7 @@ def test_metrics_not_inflated(spark, extracted, tmp_path_factory):
 
 def test_checkpoint_resume(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = synthetic_transcripts(spark, 10, 4, seed=2)
     r1 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=8)
     assert r1["rows"] == 40 and r1["failures"] == 0
@@ -110,12 +118,12 @@ def test_resume_after_partial_crash(spark, tmp_path_factory):
     produce the complete, non-duplicated output with no driver-local
     state carried between the runs."""
     out = str(tmp_path_factory.mktemp("jobcrash"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = synthetic_transcripts(spark, 10, 4, seed=3)
     import trek_spark.spark.job as jobmod
 
-    # simulate a crash after the first wave's commit: patch the wave loop
-    # by running with part_buckets=8, waves=4 and aborting via an exception
-    # raised from the metrics write of wave 2
+    # simulate a crash after the first wave's commit: run with
+    # part_buckets=8, waves=4 and abort via an exception raised from the
+    # second extract_turns call (wave 2)
     calls = {"n": 0}
     orig = jobmod.extract_turns
 
@@ -149,6 +157,144 @@ def test_resume_after_partial_crash(spark, tmp_path_factory):
     assert r["completed_buckets"] == 8
 
 
+def test_crash_before_metrics_is_repaired_by_rerun(spark, tmp_path_factory,
+                                                  monkeypatch):
+    """A crash after the last wave's markers but before the metrics job
+    leaves committed turns without metrics: the rerun extracts nothing
+    and rebuilds the metrics side table from the committed turns."""
+    import trek_spark.spark.job as jobmod
+
+    out = str(tmp_path_factory.mktemp("jobmetricscrash"))
+    transcripts = synthetic_transcripts(spark, 10, 4, seed=4)
+
+    def crashing_metrics(*a, **k):
+        raise RuntimeError("simulated driver loss")
+
+    with monkeypatch.context() as m:
+        m.setattr(jobmod, "_write_metrics", crashing_metrics)
+        with pytest.raises(RuntimeError):
+            run_extraction_job(spark, transcripts, out, part_buckets=8,
+                               waves=4)
+    assert len(jobmod._completed_buckets(
+        spark, os.path.join(out, "_committed"))) == 8
+    assert not os.path.exists(os.path.join(out, "metrics"))
+
+    r = run_extraction_job(spark, transcripts, out, part_buckets=8, waves=4)
+    assert r["rows"] == 0 and r["failures"] == 0
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.agg(F.sum("docs_in")).collect()[0][0] == 40
+    assert spark.read.parquet(os.path.join(out, "turns")).count() == 40
+
+
+def _wave_stage_tasks(spark, monkeypatch, group, **job_args):
+    """Run ``run_extraction_job`` under job group ``group``, its metrics
+    job under a group of its own; return (the job's result, the
+    [(stage name, tasks)] of every stage of ``group`` that ran tasks)."""
+    import trek_spark.spark.job as jobmod
+
+    sc = spark.sparkContext
+    write_metrics = jobmod._write_metrics
+
+    def metrics_in_own_group(*a, **k):
+        sc.setJobGroup(f"{group}-metrics", "metrics")
+        try:
+            return write_metrics(*a, **k)
+        finally:
+            sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(jobmod, "_write_metrics", metrics_in_own_group)
+    sc.setJobGroup(group, group)
+    try:
+        result = run_extraction_job(spark, **job_args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = []
+    for jid in sorted(st.getJobIdsForGroup(group)):
+        for sid in st.getJobInfo(jid).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None and info.numCompletedTasks > 0:
+                stages.append((info.name, info.numTasks))
+    return result, stages
+
+
+def test_default_partitions_sized_by_wave_rows(spark, tmp_path_factory,
+                                              monkeypatch):
+    """With the default partition count, a wave of ~10 rows runs one task
+    per core, not 4× parallelism, and no wave reads its rows back with a
+    count job. The input is a single partition, so every stage outside
+    the metrics job other than the four extraction stages runs one
+    task."""
+    par = spark.sparkContext.defaultParallelism
+    r, stages = _wave_stage_tasks(
+        spark, monkeypatch, "sized-waves",
+        transcripts=synthetic_transcripts(spark, 10, 4, seed=5).coalesce(1),
+        output_dir=str(tmp_path_factory.mktemp("jobsized")),
+        part_buckets=8, waves=4)
+    assert r["rows"] == 40 and r["failures"] == 0
+    assert sorted(n for _, n in stages if n > 1) == [par] * 4, stages
+    assert not [name for name, _ in stages if name.startswith("count at")]
+
+
+def test_explicit_partitions_honoured(spark, tmp_path_factory, monkeypatch):
+    out = str(tmp_path_factory.mktemp("jobexplicit"))
+    r, stages = _wave_stage_tasks(
+        spark, monkeypatch, "explicit-waves",
+        transcripts=synthetic_transcripts(spark, 10, 4, seed=5).coalesce(1),
+        output_dir=out, num_partitions=3, part_buckets=8, waves=2)
+    assert r["rows"] == 40
+    assert sorted(n for _, n in stages if n > 1) == [3, 3], stages
+    turns = spark.read.parquet(os.path.join(out, "turns"))
+    assert turns.agg(F.max("part_id")).collect()[0][0] <= 2
+
+
+def test_empty_buckets_marked_without_wave_job(spark, tmp_path_factory,
+                                               monkeypatch):
+    """One conversation fills one of 8 buckets: the other 7 are marked
+    from the row counts, and only one wave runs however many are asked
+    for. An empty input runs no wave at all."""
+    from trek_spark.spark.job import _completed_buckets
+    par = spark.sparkContext.defaultParallelism
+    transcripts = synthetic_transcripts(spark, 1, 4, seed=6).coalesce(1)
+    out = str(tmp_path_factory.mktemp("jobonebucket"))
+    r, stages = _wave_stage_tasks(
+        spark, monkeypatch, "one-bucket", transcripts=transcripts,
+        output_dir=out, part_buckets=8, waves=4)
+    assert r["rows"] == 4 and r["completed_buckets"] == 8
+    assert [n for _, n in stages if n > 1] == [par], stages
+    assert len(_completed_buckets(spark, os.path.join(out, "_committed"))) \
+        == 8
+
+    out = str(tmp_path_factory.mktemp("jobnorows"))
+    r, stages = _wave_stage_tasks(
+        spark, monkeypatch, "no-rows", transcripts=transcripts.limit(0),
+        output_dir=out, part_buckets=8, waves=4)
+    assert r["rows"] == 0 and r["completed_buckets"] == 8
+    assert [n for _, n in stages if n > 1] == [], stages
+    assert not os.path.exists(os.path.join(out, "turns"))
+
+
+def test_overwrite_mode_restored_after_job(spark, tmp_path_factory):
+    """The job's dynamic partition overwrite must not leak: a later
+    static overwrite on the same session still replaces every
+    partition."""
+    from trek_spark.spark.job import scoped_conf
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = str(tmp_path_factory.mktemp("jobconf"))
+    with scoped_conf(spark, key, "static"):
+        run_extraction_job(spark,
+                           synthetic_transcripts(spark, 2, 2, seed=7),
+                           os.path.join(out, "job"), part_buckets=8)
+        assert spark.conf.get(key).lower() == "static"
+        other = os.path.join(out, "other")
+        spark.createDataFrame([(1, 1), (2, 2)], "p int, v int") \
+            .write.mode("overwrite").partitionBy("p").parquet(other)
+        spark.createDataFrame([(1, 3)], "p int, v int") \
+            .write.mode("overwrite").partitionBy("p").parquet(other)
+        assert [(r.p, r.v) for r in spark.read.parquet(other).collect()] \
+            == [(1, 3)]
+
+
 def test_partial_commit_without_marker_is_reextracted(spark,
                                                       tmp_path_factory):
     """A bucket directory holding data files but NO marker (crash during
@@ -156,7 +302,7 @@ def test_partial_commit_without_marker_is_reextracted(spark,
     incomplete: the rerun re-extracts it and dynamic overwrite replaces
     the partial files, so no rows are silently dropped."""
     out = str(tmp_path_factory.mktemp("jobcommitcrash"))
-    transcripts = build_transcripts(spark).limit(40)
+    transcripts = synthetic_transcripts(spark, 10, 4, seed=8)
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=8)
     from trek_spark.spark.job import _completed_buckets
@@ -190,7 +336,8 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
     markers must still record them so resume does zero work instead of
     re-scanning them on every run."""
     out = str(tmp_path_factory.mktemp("jobempty"))
-    transcripts = build_transcripts(spark).limit(6)  # few convs, 64 buckets
+    # few convs, 64 buckets
+    transcripts = synthetic_transcripts(spark, 2, 3, seed=9)
     run_extraction_job(spark, transcripts, out, num_partitions=8,
                        part_buckets=64)
     from trek_spark.spark.job import _completed_buckets
@@ -204,7 +351,7 @@ def test_empty_buckets_not_reextracted(spark, tmp_path_factory):
 
 def test_salting_spreads_conversations(spark):
     from trek_spark.spark.job import salted
-    t = build_transcripts(spark)
+    t = synthetic_transcripts(spark, 8, 8, seed=10)
     df = salted(t, 8, salt_buckets=16)
     parts = df.withColumn("pid", F.spark_partition_id()) \
         .groupBy("pid").count().collect()
@@ -218,7 +365,7 @@ def test_giant_conversation_skew(spark, tmp_path_factory):
     that the job completes with correct output."""
     from pyspark.sql import functions as F
 
-    base = build_transcripts(spark).limit(8)
+    base = synthetic_transcripts(spark, 2, 4, seed=11)
     # one conversation with 400 turns (vs 8 normal rows)
     giant = (spark.range(400)
              .select(F.lit("conv-giant").alias("conv_id"),
@@ -256,7 +403,7 @@ def test_iceberg_gate_and_parquet_fallback(spark, tmp_path_factory):
     assert iceberg_available(spark) is False
 
     out = str(tmp_path_factory.mktemp("jobtable"))
-    transcripts = build_transcripts(spark).limit(20)
+    transcripts = synthetic_transcripts(spark, 5, 4, seed=12)
     r1 = run_extraction_job(spark, transcripts, out, num_partitions=8,
                             part_buckets=8,
                             output_table="cat.db.turns")

@@ -205,7 +205,7 @@ def _trek_parse_inner(html: str, url: Optional[str] = None,
         opts["url"] = url
     url = opts["url"]
 
-    start = time.time()
+    start = time.perf_counter()
     html = html or ""
 
     # ONE tokenization per document: parse the full document, collect the
@@ -302,6 +302,6 @@ def _response(content_html: str, metadata: dict, collected,
         "favicon": metadata.get("favicon", ""),
         "image": metadata.get("image", ""),
         "word_count": metadata.get("word_count", 0),
-        "parse_time_ms": int((time.time() - start) * 1000),
+        "parse_time_ms": int((time.perf_counter() - start) * 1000),
         "schema_org_data": metadata.get("schema_org_data", []),
     }

@@ -79,6 +79,10 @@ def metadata_field_ok(actual: str, expected: str) -> bool:
 
 
 def load_fixtures(limit: Optional[int] = None) -> list[Fixture]:
+    if not os.path.isdir(FIXTURES_DIR):
+        raise FileNotFoundError(
+            f"reference corpus missing: {FIXTURES_DIR} "
+            "(set TREK_FIXTURES_DIR)")
     names = sorted(
         f[:-5] for f in os.listdir(FIXTURES_DIR) if f.endswith(".html")
     )

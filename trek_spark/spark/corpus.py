@@ -14,11 +14,17 @@ shape, same payload distribution).
 The golden table lifts ``tests/expected/*.md`` to per-turn expected outputs
 (`expected_markdown` + metadata preamble fields) for the per-turn equality
 gate.
+
+``synthetic_transcripts`` needs no fixture corpus: it generates small
+article-shaped pages from a seed (stdlib only), for tests of job mechanics
+— resume, salting, skew, sinks, metrics — rather than of extraction
+parity.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import random
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,3 +118,44 @@ def tile_transcripts(spark: SparkSession, copies: int) -> DataFrame:
         .withColumn("ts", F.col("ts") + F.make_interval(hours=F.col("tile")))
         .drop("tile")
     )
+
+
+_WORDS = ("spark", "column", "batch", "arrow", "partition", "shuffle",
+          "extract", "article", "reader", "content", "window", "table",
+          "stage", "driver", "worker", "lineage", "resume", "bucket",
+          "marker", "commit", "scan", "filter", "metric", "wave")
+
+
+def _sentence(rng: random.Random) -> str:
+    words = [rng.choice(_WORDS) for _ in range(rng.randint(8, 16))]
+    return " ".join(words).capitalize() + "."
+
+
+def _article_html(rng: random.Random, title: str) -> str:
+    paras = "".join(
+        "<p>" + " ".join(_sentence(rng) for _ in range(rng.randint(2, 4)))
+        + "</p>" for _ in range(rng.randint(2, 5)))
+    return (
+        f"<html><head><title>{title}</title></head><body>"
+        "<nav><a href='/'>Home</a> <a href='/about'>About</a></nav>"
+        f"<article><h1>{title}</h1>{paras}</article>"
+        "<footer><p>Copyright example.org</p></footer></body></html>")
+
+
+def synthetic_transcripts(spark: SparkSession, convs: int,
+                          turns_per_conv: int, seed: int = 0) -> DataFrame:
+    """``convs`` conversations of ``turns_per_conv`` article-shaped HTML
+    turns in the ``TRANSCRIPT_SCHEMA`` columns; the same arguments give
+    the same rows."""
+    rng = random.Random(seed)
+    rows = []
+    for c in range(convs):
+        conv_id = f"conv-{seed}-{c:04d}"
+        for t in range(turns_per_conv):
+            title = f"{_sentence(rng)[:-1]} {c}.{t}"
+            rows.append((
+                conv_id, t, _ROLES[t % len(_ROLES)],
+                _article_html(rng, title), "",
+                _EPOCH + dt.timedelta(hours=c, minutes=t),
+                f"https://example.org/{conv_id}/{t}"))
+    return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)

@@ -524,7 +524,7 @@ def extract_pdf_one(text: Optional[str]) -> dict:
                 decoded = b""
             if looks_like_pdf(decoded):
                 data = decoded
-        t0 = time.time()
+        t0 = time.perf_counter_ns()
         plain = pdf_to_text(data) if looks_like_pdf(data) else ""
         out = dict(_EMPTY)
         out.update({
@@ -535,7 +535,7 @@ def extract_pdf_one(text: Optional[str]) -> dict:
             "description": "", "domain": "", "image": "", "favicon": "",
             "word_count": count_words(plain),
             "extractor_type": "pdf-layout",
-            "parse_time_ms": int((time.time() - t0) * 1000),
+            "parse_time_ms": (time.perf_counter_ns() - t0) // 1_000_000,
             "error": None if looks_like_pdf(data) else "not_a_pdf",
             "content_spans": [],
             "meta_tags": [],
@@ -613,7 +613,7 @@ def extract_map_in_pandas(iterator: Iterator[pd.DataFrame]
     ctx = TaskContext.get()
     part_id = ctx.partitionId() if ctx is not None else -1
     for batch_idx, pdf in enumerate(iterator):
-        t0 = time.time()
+        t0 = time.perf_counter_ns()
         urls = pdf["url"] if "url" in pdf.columns else None
         tools = pdf["tool"] if "tool" in pdf.columns else None
         # per-document gen0 GC sweeps happen inside _extract_series
@@ -623,5 +623,5 @@ def extract_map_in_pandas(iterator: Iterator[pd.DataFrame]
         out["part_id"] = part_id
         out["batch_idx"] = batch_idx
         out["doc_bytes"] = pdf["text"].str.len().fillna(0).astype("int64").values
-        out["wall_ms"] = int((time.time() - t0) * 1000)
+        out["wall_ms"] = (time.perf_counter_ns() - t0) // 1_000_000
         yield out

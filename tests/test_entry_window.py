@@ -1,4 +1,4 @@
-"""Record-window contract for __spark_entry__ (SURVEY §11).
+"""Record-window and caller contracts for __spark_entry__ (SURVEY §11).
 
 The recording harness keeps AT MOST 50 queries() entries per run (empirical:
 r5 recorded 50 of 54, r6 recorded 50 of 63 — a count cap, not a time
@@ -9,6 +9,11 @@ An op with none of these is dead code and must be removed, not parked.
 The one exception is ``_AWAITING_RETIREMENT``: uncalled ops that still
 carry their own unit tests and leave in a later change. That list may
 only shrink.
+
+The same rule holds one level up: every module under ``trek_spark/`` must
+be imported, directly or through other ``trek_spark`` modules, from a job,
+a bench, ``perfbench/`` or ``__spark_entry__.py``. Tests do not count as
+callers. ``_AWAITING_RETIREMENT_MODULES`` may only shrink.
 """
 import ast
 import glob
@@ -53,6 +58,13 @@ _AWAITING_RETIREMENT = {
     "quality_classifier_eval", "referential_integrity_audit",
     "source_mix_sample", "tables_fingerprint", "transcript_cross_conv_echo",
 }
+
+# Files whose imports keep a trek_spark module alive.
+_MODULE_ROOT_GLOBS = ("jobs/*.py", "bench.py", "bench_extra.py",
+                      "perfbench/**/*.py", "__spark_entry__.py")
+# Modules no root imports that are kept, with their own tests, until a
+# later change retires them. Nothing may be added here.
+_AWAITING_RETIREMENT_MODULES = {"trek_spark.spark.sources"}
 
 
 def _words(text):
@@ -156,8 +168,66 @@ def test_oracle_keys_subset_of_queries():
             assert name not in o
 
 
-def test_rows_only_entries_kept_importable_for_r10():
-    for name, fn in E._ROWS_ONLY_RECORDED.items():
-        assert callable(fn), name
-    for name, fn in E._R8_ROWS_ONLY.items():
-        assert callable(fn), name
+def _module_name(path):
+    name = os.path.relpath(path, _ROOT)[:-len(".py")].replace(os.sep, ".")
+    return name[:-len(".__init__")] if name.endswith(".__init__") else name
+
+
+def _imported_modules(path, modules):
+    """The modules of ``modules`` that the file at ``path`` imports anywhere
+    (module level or inside a function), with the packages on the way.
+    A string constant naming a module counts too: ``perfbench`` loads its
+    traced phases with ``importlib.import_module(name)``."""
+    name = _module_name(path)
+    package = (name if path.endswith("__init__.py")
+               else name.rpartition(".")[0])
+    found = set()
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            targets = [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = package.split(".")
+                parts = parts[:len(parts) - node.level + 1]
+                base = ".".join(parts + [base] if base else parts)
+            targets = [base] + [f"{base}.{alias.name}"
+                                for alias in node.names]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            targets = [node.value]
+        else:
+            continue
+        for target in targets:
+            while target:
+                if target in modules:
+                    found.add(target)
+                target = target.rpartition(".")[0]
+    return found
+
+
+def _unimported_modules():
+    modules = {_module_name(path): path for path in glob.glob(
+        os.path.join(_ROOT, "trek_spark", "**", "*.py"), recursive=True)}
+    stack = [m for pattern in _MODULE_ROOT_GLOBS
+             for path in glob.glob(os.path.join(_ROOT, pattern),
+                                   recursive=True)
+             for m in _imported_modules(path, modules)]
+    live = set()
+    while stack:
+        name = stack.pop()
+        if name not in live:
+            live.add(name)
+            stack.extend(_imported_modules(modules[name], modules))
+    return set(modules) - live
+
+
+def test_every_module_is_imported_from_a_root():
+    """No dead modules: each module under trek_spark/ is imported by a
+    job, a bench, perfbench or __spark_entry__.py, directly or through
+    other trek_spark modules. Modules awaiting retirement are exempt, but
+    only while nothing imports them."""
+    unimported = _unimported_modules()
+    dead = sorted(unimported - _AWAITING_RETIREMENT_MODULES)
+    assert not dead, f"{len(dead)} module(s) no root imports: {dead}"
+    stale = sorted(_AWAITING_RETIREMENT_MODULES - unimported)
+    assert not stale, f"drop from _AWAITING_RETIREMENT_MODULES: {stale}"

@@ -1,12 +1,13 @@
 """Structured Streaming extraction tests: file source → fused extraction →
 parquet sink with checkpoint; watermarked windowed metrics."""
 
+import datetime as dt
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from trek_spark.spark.corpus import build_transcripts
+from trek_spark.spark.corpus import TRANSCRIPT_SCHEMA, build_transcripts
 from trek_spark.spark.session import get_spark
 from trek_spark.spark.streaming import (
     read_transcript_stream, stream_extract_turns, stream_turn_rate,
@@ -268,34 +269,108 @@ def test_stream_sessionize_dynamic_windows(spark, tmp_path_factory):
     }
 
 
-def test_stream_late_data_dropped_after_checkpoint_restore(spark):
+def _rows(batch):
+    """``TRANSCRIPT_SCHEMA`` rows from (conv, idx, role, text, seconds)."""
+    t0 = dt.datetime(2024, 1, 1)
+    return [(c, i, role, txt, None, t0 + dt.timedelta(seconds=s), None)
+            for c, i, role, txt, s in batch]
+
+
+def _late_data_audit(spark, base):
+    """Two availableNow drains against ONE checkpoint (file sink: the
+    memory sink cannot restore a checkpoint). Drain 1 ingests a
+    window-[0,60) row plus a row that advances the watermark to 110 s, so
+    the window finalizes and emits turns=1. Drain 2 restores wm=110 from
+    the checkpoint and replays a row INTO the closed window, which the
+    state operator must drop. Returns the sink rows with drain 2's
+    ``numRowsDroppedByWatermark`` as a ``dropped_late`` column. Within one
+    availableNow run the late filter uses the pre-batch watermark, so only
+    a cross-restart recovery pins the drop."""
+    d, ckpt, out = f"{base}/in", f"{base}/ckpt", f"{base}/out"
+
+    def drain():
+        stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(d)
+        agg = (stream_turn_rate(stream, watermark="10 seconds")
+               .select(F.col("window.start").cast("long")
+                       .alias("w_start_s"), "role", "turns"))
+        q = (agg.writeStream.format("parquet").option("path", out)
+             .option("checkpointLocation", ckpt)
+             .outputMode("append").trigger(availableNow=True).start())
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError("late-data drain did not finish")
+        return sum(
+            so.get("numRowsDroppedByWatermark", 0)
+            for p in q.recentProgress
+            for so in p.get("stateOperators", []))
+
+    spark.createDataFrame(
+        _rows([("c1", 0, "user", "on time", 5),
+               ("c1", 1, "user", "advances watermark", 120)]),
+        TRANSCRIPT_SCHEMA).coalesce(1).write.mode("append").parquet(d)
+    drain()
+    spark.createDataFrame(
+        _rows([("c2", 0, "user", "too late", 30),
+               ("c2", 1, "user", "fresh", 130)]),
+        TRANSCRIPT_SCHEMA).coalesce(1).write.mode("append").parquet(d)
+    dropped = drain()
+
+    return (spark.read.parquet(out)
+            .withColumn("dropped_late",
+                        F.lit(int(dropped)).cast("long"))
+            .orderBy("w_start_s", "role"))
+
+
+def _dedup_within_watermark(spark, base):
+    """``dropDuplicatesWithinWatermark`` over two files: batch 1 carries a
+    key and its in-batch duplicate; batch 2 replays the same key within
+    the watermark window plus one fresh key."""
+    d, ckpt = f"{base}/in", f"{base}/ckpt"
+
+    spark.createDataFrame(
+        _rows([("c1", 0, "user", "first", 10),
+               ("c1", 1, "assistant", "reply", 20),
+               ("c1", 0, "user", "in-batch dup", 30)]),
+        TRANSCRIPT_SCHEMA).coalesce(1).write.mode("append").parquet(d)
+    spark.createDataFrame(
+        _rows([("c1", 0, "user", "cross-batch dup", 40),
+               ("c2", 0, "user", "fresh", 50)]),
+        TRANSCRIPT_SCHEMA).coalesce(1).write.mode("append").parquet(d)
+
+    stream = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(d))
+    deduped = (stream.withWatermark("ts", "10 minutes")
+               .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"]))
+    q = (deduped.writeStream.format("memory")
+         .queryName("stream_ddww")
+         .option("checkpointLocation", ckpt)
+         .outputMode("append").trigger(availableNow=True).start())
+    if not q.awaitTermination(300):
+        q.stop()
+        raise RuntimeError("dedup drain did not finish")
+    return (spark.sql(
+        "SELECT conv_id, turn_idx, role, text FROM stream_ddww")
+        .orderBy("conv_id", "turn_idx"))
+
+
+def test_stream_late_data_dropped_after_checkpoint_restore(spark, tmp_path):
     """The watermark must survive a checkpoint restore and drop a row
     replayed into an already-closed window: exactly one emitted row for
     window [0,60) with turns=1 (the late row did NOT leak in or
     resurrect closed state), and the engine's numRowsDroppedByWatermark
     records exactly the one drop."""
-    import importlib.util as u
-
-    spec = u.spec_from_file_location("entry_late", "__spark_entry__.py")
-    mod = u.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    rows = mod._stream_late_data_audit(spark, "unused").collect()
+    rows = _late_data_audit(spark, str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["role"], r["turns"], r["dropped_late"]) == ("user", 1, 1)
 
 
-def test_stream_dedup_within_watermark_suppresses_replays(spark):
+def test_stream_dedup_within_watermark_suppresses_replays(spark, tmp_path):
     """dropDuplicatesWithinWatermark (the engine-native TTL dedup) must
     suppress BOTH the in-batch duplicate and the cross-batch replay of
     (c1, 0) while letting the fresh key through — exactly 3 rows, each
     keeping its FIRST-seen text."""
-    import importlib.util as u
-
-    spec = u.spec_from_file_location("entry_ddww", "__spark_entry__.py")
-    mod = u.module_from_spec(spec)
-    spec.loader.exec_module(mod)
     rows = [(r["conv_id"], r["turn_idx"], r["text"]) for r in
-            mod._stream_dedup_within_watermark(spark, "unused").collect()]
+            _dedup_within_watermark(spark, str(tmp_path)).collect()]
     assert rows == [("c1", 0, "first"), ("c1", 1, "reply"),
                     ("c2", 0, "fresh")]

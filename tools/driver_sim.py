@@ -4,10 +4,11 @@ sf0.01, compare against the DuckDB oracle where one exists (rows +
 schema + sorted-value hash convention), record rows-only otherwise,
 and time everything — the local rehearsal of CORRECTNESS_r{N}.json."""
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 

@@ -4,8 +4,8 @@ Usage: python tools/fixcheck.py <fixture-name> [--ref] [--full]
 Shows unified diff of our markdown vs expected; --ref also runs the compiled
 reference binary for three-way comparison.
 """
-import json, subprocess, sys, difflib
-sys.path.insert(0, "/root/repo")
+import json, os, subprocess, sys, difflib
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from trek_spark.extract.pipeline import trek_parse
 from trek_spark.fixtures import load_fixtures
 

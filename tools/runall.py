@@ -1,5 +1,5 @@
-import sys, time, difflib
-sys.path.insert(0, "/root/repo")
+import os, sys, time, difflib
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from trek_spark.extract.pipeline import trek_parse
 from trek_spark.fixtures import load_fixtures, metadata_field_ok
 fixtures = load_fixtures()

@@ -7,7 +7,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from trek_spark.extract.pipeline import trek_parse
 from trek_spark.fixtures import load_fixtures
 

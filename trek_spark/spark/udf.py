@@ -1,15 +1,16 @@
-"""Vectorized extraction UDFs.
+"""Vectorized extraction worker.
 
 The whole per-document pipeline (SURVEY.md §2.1-§2.8) is fused into ONE
-Arrow-batched pandas UDF: Spark sees ``string → struct`` with zero per-row
-Python dispatch at the Spark level — batches cross the JVM↔Python boundary
-once as Arrow record batches, and the Python loop inside the batch is
-amortized (the reference's per-doc cost dominates; Arrow overhead is noise).
+Arrow-batched ``mapInPandas`` stage: Spark sees ``string → struct`` with
+zero per-row Python dispatch at the Spark level — batches cross the
+JVM↔Python boundary once as Arrow record batches, and the Python loop inside
+the batch is amortized (the reference's per-doc cost dominates; Arrow
+overhead is noise).
 
-``trek_extract_udf`` is the scalar form for ``withColumn``;
-``extract_map_in_pandas`` is the ``mapInPandas`` form that additionally emits
-per-batch lineage/metrics columns (docs in/out, bytes, wall ms, failures) for
-the metrics side-table required by the north rule.
+``extract_map_in_pandas`` is that worker: it dispatches ``tool == 'pdf'``
+turns to the PDF path and every other turn to the HTML path, and adds the
+lineage columns ``part_id``, ``batch_idx``, ``doc_bytes`` and ``wall_ms``
+for the metrics side-table required by the north rule.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ import traceback
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -578,16 +578,6 @@ def _extract_series(texts: pd.Series, urls: Optional[pd.Series],
         if was_enabled:
             gc.enable()
     return pd.DataFrame(rows, columns=[f.name for f in RESULT_SCHEMA.fields])
-
-
-def make_trek_extract_udf():
-    """Scalar pandas UDF: (text[, url]) → RESULT_SCHEMA struct."""
-
-    @F.pandas_udf(RESULT_SCHEMA)
-    def trek_extract(text: pd.Series, url: pd.Series) -> pd.DataFrame:
-        return _extract_series(text, url)
-
-    return trek_extract
 
 
 METRICS_SCHEMA = StructType([
